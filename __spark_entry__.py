@@ -69,7 +69,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # exists — VERDICT.md stayed the round-5 judge), so "latest committed
 # round + 1" under-counted and would have parked the keyed-7 flags
 # forever.
-_CURRENT_ROUND = 15
+_CURRENT_ROUND = 16
 
 _RESCORE_AFTER = {
     # r3 operator rewrites whose consumers got NO r3 driver row
@@ -511,6 +511,33 @@ _RESCORE_AFTER = {
     "sim_lsh_topk": 15,
     "sim_ann_recall": 15,
     "dedup_embedding_pairs": 15,
+    # r16 changes (this round's window is being built now — ACTIVE):
+    #   operators/{similarity,dedup,ivfpq}.py: the SQL-text builders
+    #   (lsh_bucket, band_structs_sql, minhash_est_sql, _adc_sum_sql,
+    #   _sub_code_sql) backtick-quote the column names they interpolate
+    #   (ADVICE r15). Same parsed expressions for every plain name; per
+    #   the r2 lesson the registered execution paths reaching them (the
+    #   r15 lists above, minus stream_dedup_minhash_bands, which builds
+    #   its bands through the unchanged Column wrapper) get a
+    #   post-change row:
+    "sim_lsh_topk": 16,
+    "sim_ann_recall": 16,
+    "dedup_embedding_pairs": 16,
+    "dedup_minhash_pairs": 16,
+    "dedup_minhash_eval": 16,
+    "dedup_cross_corpus_prune": 16,
+    "dedup_minhash_tuning": 16,
+    "curate_corpus": 16,
+    "sim_ivfpq_adc_topk": 16,
+    "sim_ivfpq_recall": 16,
+    "sim_ivfpq_refined_topk": 16,
+    "sim_ivfpq_refined_recall": 16,
+    "sim_mmr_over_ivfpq": 16,
+    "sim_mmr_candidate_recall": 16,
+    #   sources/batch.py: load_table reuses each file's inferred schema.
+    #   Every query reads through it, so it is pinned by a test instead
+    #   of by flags (tests/test_plan_reuse.py: same schema and rows as
+    #   a plain read for every table).
 }
 
 

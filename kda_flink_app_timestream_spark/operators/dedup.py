@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 import hashlib
 
+from ..functions import sql_ident
 from ..functions.text import portable_hash64, tokens, word_shingles
 from ..functions.exact import floor_round
 from ..session import defer_release, release_storage
@@ -70,7 +71,7 @@ def _scatter_batch(df: DataFrame) -> DataFrame:
 
 
 def band_structs_sql(
-    sig_sql: str,
+    sig_col: str,
     num_bands: int = NUM_BANDS,
     rows_per_band: int | None = None,
     band_field: str = "band_idx",
@@ -85,13 +86,15 @@ def band_structs_sql(
     (plans/dedup.py:minhash_sig_ctes). SQL-string form r15: the
     Column-API build cost ~80 py4j round trips per call (~0.16 s) —
     the batch callers assemble whole stages as one selectExpr now
-    (guide §1/§7.3 driver-side planning)."""
+    (guide §1/§7.3 driver-side planning). ``sig_col`` is a column
+    name, quoted as one identifier."""
     if rows_per_band is None:
         rows_per_band = NUM_MINHASHES // num_bands
+    sig = sql_ident(sig_col)
     structs = ", ".join(
         f"named_struct('{band_field}', {b}, '{key_field}', concat_ws(':', "
         + ", ".join(
-            f"CAST({sig_sql}[{b * rows_per_band + r}] AS STRING)"
+            f"CAST({sig}[{b * rows_per_band + r}] AS STRING)"
             for r in range(rows_per_band)
         )
         + "))"
@@ -241,7 +244,8 @@ def minhash_est_sql(
     twin). ``{num_hashes}D`` is a double literal — a bare ``8.0``
     would parse as DECIMAL and change the division's result type."""
     return (
-        f"round(size(filter(zip_with({a}, {b}, (x, y) -> x = y), m -> m)) "
+        f"round(size(filter(zip_with({sql_ident(a)}, {sql_ident(b)}, "
+        f"(x, y) -> x = y), m -> m)) "
         f"/ {float(num_hashes)}D, 4)"
     )
 

@@ -118,12 +118,12 @@ def _adc_sum_sql(code_ids_per_sub: list[list[int]]) -> str:
     terms = []
     for s, code_ids in enumerate(code_ids_per_sub):
         if code_ids == list(range(code_ids[0], code_ids[0] + len(code_ids))):
-            sl = f"CAST(code_{s} - {code_ids[0]} + 1 AS INT)"
+            sl = f"CAST(`code_{s}` - {code_ids[0]} + 1 AS INT)"
             slot = f"(CASE WHEN ({sl} >= 1 AND {sl} <= {len(code_ids)}) THEN {sl} END)"
         else:
             entries = ", ".join(f"{code}, {i + 1}" for i, code in enumerate(code_ids))
-            slot = f"CAST(map({entries})[code_{s}] AS INT)"
-        terms.append(f"element_at(lut_{s}, {slot})")
+            slot = f"CAST(map({entries})[`code_{s}`] AS INT)"
+        terms.append(f"element_at(`lut_{s}`, {slot})")
     return " + ".join(terms)
 
 
@@ -338,7 +338,7 @@ def _sub_code_sql(cb_s: list[tuple[int, list[int]]], s: int, sub_dim: int) -> st
     """Nearest codeword id for subspace ``s`` of a quantized row ``qv``
     (exact integer distances, ties to the smaller code id via
     ``array_min`` over (d, c) structs), as SQL text."""
-    sub = f"slice(qv, {s * sub_dim + 1}, {sub_dim})"
+    sub = f"slice(`qv`, {s * sub_dim + 1}, {sub_dim})"
     cand = (
         f"transform({_sub_cb_literal_sql(cb_s)}, "
         f"e -> named_struct('d', {_sq_dist_sql(sub, 'e.cv')}, 'c', e.c))"

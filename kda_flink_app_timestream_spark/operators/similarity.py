@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 import functools
 import hashlib
 
+from ..functions import sql_ident
 from ..functions.vectors import as_double, dot_unrolled, norm_unrolled
 
 N_PLANES = 8  # 256 buckets
@@ -99,6 +100,7 @@ def lsh_bucket(
     §7.3 driver-side planning). The SQL parses to the same fold tree.
     A Column argument keeps the original builder."""
     if isinstance(vec, str):
+        vec = sql_ident(vec)
         terms = []
         for p in range(n_planes):
             d = (

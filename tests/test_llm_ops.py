@@ -1515,6 +1515,68 @@ def test_sub_code_sql_matches_python_argmin(spark):
     assert got_adc == {i: lut[i] for i in range(len(cb))}
 
 
+def test_band_structs_matches_band_structs_sql(spark):
+    """The LSH band layout has two hand-kept renderings: ``band_structs``
+    (Column API, the streaming band-dedup query) and ``band_structs_sql``
+    (SQL text, the batch candidate pairs). Pin them against each other
+    over several band shapes and field names, on signatures with
+    negative, large and NULL elements (concat_ws skips NULLs in both)."""
+    import random
+
+    from kda_flink_app_timestream_spark.operators.dedup import (
+        band_structs,
+        band_structs_sql,
+    )
+
+    rng = random.Random(11)
+    rows = [
+        (i, [rng.choice([None, rng.randint(-(2**40), 2**40)]) for _ in range(12)])
+        for i in range(30)
+    ]
+    df = spark.createDataFrame(rows, "rid long, sig array<bigint>")
+    for num_bands, rows_per_band, fields in (
+        (4, None, ("band_idx", "band_key")),
+        (2, 4, ("band_idx", "band_key")),
+        (3, 4, ("b", "k")),
+        (6, 2, ("idx", "key")),
+    ):
+        col = band_structs(F.col("sig"), num_bands, rows_per_band, *fields)
+        sql = band_structs_sql("sig", num_bands, rows_per_band, *fields)
+        via_col = df.select("rid", col.alias("bands"))
+        via_sql = df.selectExpr("rid", f"{sql} AS bands")
+        assert via_col.schema == via_sql.schema
+        assert sorted(via_col.collect()) == sorted(via_sql.collect())
+
+
+def test_sql_builders_quote_column_names(spark):
+    """The SQL-text builders interpolate column names as quoted
+    identifiers, so a name with a space, a dot or a backtick resolves to
+    the same column the Column API would (not a parse error or a
+    struct-field lookup)."""
+    from kda_flink_app_timestream_spark.operators.dedup import (
+        band_structs,
+        band_structs_sql,
+        minhash_est_sql,
+    )
+    from kda_flink_app_timestream_spark.operators.similarity import lsh_bucket
+
+    vecs = [(i, [float((i * 7 + d) % 5 - 2) for d in range(64)]) for i in range(6)]
+    df = spark.createDataFrame(vecs, "rid long, v array<double>")
+    odd = df.withColumnRenamed("v", "my v.`x`")
+    got = odd.select("rid", lsh_bucket("my v.`x`").alias("b")).collect()
+    want = df.select("rid", lsh_bucket(F.col("v")).alias("b")).collect()
+    assert sorted(got) == sorted(want)
+
+    sigs = spark.createDataFrame(
+        [([1, 2, 3, 4, 5, 6, 7, 8], [1, 2, 0, 4, 5, 0, 7, 8])],
+        "`sig a` array<bigint>, `sig.b` array<bigint>",
+    )
+    est = sigs.selectExpr(f"{minhash_est_sql(8, 'sig a', 'sig.b')} AS est")
+    assert est.first()["est"] == 0.75
+    bands = sigs.selectExpr(f"{band_structs_sql('sig a')} AS bands").first()["bands"]
+    assert bands == sigs.select(band_structs(F.col("`sig a`")).alias("x")).first()["x"]
+
+
 def test_mmr_semi_join_fallback_matches_pushdown(spark, sf_dir, monkeypatch):
     """Above MMR_PUSHDOWN_MAX_IDS the candidate lookup falls back to a
     broadcast semi-join instead of an inlined In filter (ADVICE r11);
