@@ -13,7 +13,6 @@ import math
 import os
 import re
 import stat
-import weakref
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,14 +38,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The parquet schema is inferred once per file and reused
     (``_parquet_schema``): plain ``spark.read.parquet`` launches a
     footer-reading Spark job on every call, and a catalog pass makes
-    one call per table it reads. The cache key is the session (held
-    weakly), the path, the file's identity (``st_mtime_ns`` and
-    ``st_size``, or those of every file under a directory table) and the
-    reader confs that change what inference returns, so a rewritten
-    table is re-inferred on its next load. Schemas are cached, not
-    frames: every call still builds a fresh relation with fresh
-    expression IDs and a fresh file listing, so two loads of one table
-    self-join unambiguously and no file index outlives a rewrite.
+    one call per table it reads. The cache is keyed on the path, the
+    file's identity (``st_mtime_ns`` and ``st_size``) and the reader
+    confs that change what inference returns, so a rewritten table is
+    re-inferred on its next load. Only single local files are cached: a
+    directory table (or a non-local path) is read plainly, since keying
+    it would mean listing and stat-ing every data file on each call.
+    Schemas are cached, not frames: every call still builds a fresh
+    relation with fresh expression IDs and a fresh file listing, so two
+    loads of one table self-join unambiguously and no file index
+    outlives a rewrite.
     """
     path = f"{sf_dir}/{name}.parquet"
     schema = _parquet_schema(spark, path)
@@ -65,47 +66,39 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )
 
-# session -> {path: (identity key, inferred schema)}
-_SCHEMA_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# path -> ((file identity, inference confs), inferred schema)
+_SCHEMA_CACHE: dict[str, tuple[tuple, StructType]] = {}
 
 
 def _file_identity(path: str) -> tuple | None:
-    """``(st_mtime_ns, st_size)`` of a local parquet file, or the sorted
-    ``(relative path, st_mtime_ns, st_size)`` of every file under a
-    local directory table. None for non-local schemes or a failed stat:
-    such paths are not cached."""
+    """``(st_mtime_ns, st_size)`` of a local parquet file. None for a
+    directory, a non-local scheme or a failed stat: such paths are not
+    cached."""
     u = urlparse(path)
     if u.scheme not in ("", "file"):
         return None
     try:
         st = os.stat(u.path)
-        if not stat.S_ISDIR(st.st_mode):
-            return (st.st_mtime_ns, st.st_size)
-        files = []
-        for root, _dirs, names in os.walk(u.path):
-            for n in names:
-                full = os.path.join(root, n)
-                fst = os.stat(full)
-                files.append((os.path.relpath(full, u.path), fst.st_mtime_ns, fst.st_size))
-        return tuple(sorted(files))
     except OSError:
         return None
+    if stat.S_ISDIR(st.st_mode):
+        return None
+    return (st.st_mtime_ns, st.st_size)
 
 
 def _parquet_schema(spark: SparkSession, path: str) -> StructType | None:
-    """The inferred schema of ``path`` under ``spark``, memoized until
-    the file's identity or an inference conf changes; None (infer on
-    every read) when the path's identity is unknown."""
+    """The inferred schema of ``path``, memoized until the file's
+    identity or an inference conf changes; None (infer on every read)
+    when the path is not a single local file."""
     ident = _file_identity(path)
     if ident is None:
         return None
     key = (ident, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
-    per_session = _SCHEMA_CACHE.setdefault(spark, {})
-    hit = per_session.get(path)
+    hit = _SCHEMA_CACHE.get(path)
     if hit is not None and hit[0] == key:
         return hit[1]
     schema = spark.read.parquet(path).schema
-    per_session[path] = (key, schema)
+    _SCHEMA_CACHE[path] = (key, schema)
     return schema
 
 

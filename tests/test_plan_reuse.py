@@ -76,7 +76,7 @@ def test_load_table_sees_a_rewritten_table(spark, tmp_path):
     assert df.columns == ["a", "c", "d"]
     assert [tuple(r) for r in df.collect()] == [(3, 0.5, "z")]
 
-    # a directory table, rewritten in place by Spark itself
+    # a directory table (read without the cache), rewritten in place by Spark
     spark.createDataFrame([(1, "x")], "k int, v string").write.parquet(f"{d}/u.parquet")
     assert load_table(spark, d, "u").columns == ["k", "v"]
     spark.createDataFrame([(2, 7.5)], "k int, w double").write.mode("overwrite").parquet(
