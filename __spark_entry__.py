@@ -538,6 +538,21 @@ _RESCORE_AFTER = {
     #   Every query reads through it, so it is pinned by a test instead
     #   of by flags (tests/test_plan_reuse.py: same schema and rows as
     #   a plain read for every table).
+    #   streaming/kinesis_pysource.py: the partitioned reader is now the
+    #   only kinesis_py stream reader (the driver-side simple reader and
+    #   streaming/kinesis_dev.py are gone), shard listing and the
+    #   initial position are module functions, and the batch snapshot
+    #   drains through the streaming reader's paging loop. The two
+    #   incremental consume queries now run one availableNow kinesis_py
+    #   query per wave over a shared checkpoint. Every kinesis_py
+    #   consumer gets a post-change row:
+    "kinesis_incremental_consume": 16,
+    "kinesis_parallel_consume": 16,
+    "kinesis_pysource_consume": 16,
+    "kinesis_pysource_batch_snapshot": 16,
+    "kinesis_pysource_latest_resume": 16,
+    "kinesis_pysource_reshard_resume": 16,
+    "kinesis_pysource_partitioned_consume": 16,
 }
 
 

@@ -157,6 +157,59 @@ def parse_typed_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return typed_measure_projection(pts)
 
 
+def _kinesis_producer(fk):
+    """boto3 Kinesis client on the in-process fake endpoint."""
+    import boto3
+
+    return boto3.client(
+        "kinesis",
+        endpoint_url=fk.endpoint_url,
+        region_name="us-east-1",
+        aws_access_key_id="test",
+        aws_secret_access_key="test",
+    )
+
+
+def _kinesis_py_stream(spark: SparkSession, fk, stream_name: str, **options):
+    """``spark.readStream.format("kinesis_py")`` on the fake endpoint."""
+    reader = (
+        spark.readStream.format("kinesis_py")
+        .option("streamName", stream_name)
+        .option("endpointUrl", fk.endpoint_url)
+        .option("accessKeyId", "test")
+        .option("secretAccessKey", "test")
+    )
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    return reader.load()
+
+
+def _consume_available_now(
+    spark: SparkSession, fk, stream_name: str, out: str, ckpt: str, **options
+) -> None:
+    """One ``availableNow`` run of ``kinesis_py`` into a parquet sink,
+    resuming from (and committing to) the checkpoint at ``ckpt``."""
+    q = (
+        _kinesis_py_stream(spark, fk, stream_name, **options)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300), "kinesis_py query did not terminate"
+
+
+def _kinesis_points(raw: DataFrame) -> DataFrame:
+    """Gunzip + parse consumed ``kinesis_py`` rows back into points."""
+    from ..streaming.source import decode_payload
+
+    parsed = parse_service_logs(
+        raw.select(decode_payload(F.col("data"), codec="gzip").alias("value"))
+    )
+    return parsed.select(*_POINT_COLS)
+
+
 def _kinesis_produce_consume_roundtrip(
     spark: SparkSession,
     sf_dir: str,
@@ -164,116 +217,46 @@ def _kinesis_produce_consume_roundtrip(
     event_cap: int,
     n_waves: int,
     stream_name: str,
-    executor_parallel: bool,
 ) -> DataFrame:
-    """Shared produce→poll→parse scaffold for the two Kinesis consume
-    queries: render ``events`` rows (event_id <= ``event_cap``) into the
-    generator's exact gzip'd service-log wire format
-    (timestream_kinesis_data_gen.py:24-36, 75-78; partition key =
-    account id), produce them in ``n_waves`` waves to a 4-shard
-    in-process fake endpoint (real boto3 wire protocol, 500-record
-    PutRecords chunks), consume each wave with one incremental
-    ``KinesisMicroBatchPoller`` poll+commit, and parse the union back
-    into points.
-
-    ``executor_parallel`` picks the consumption mode AND the checkpoint
-    lifetime: the driver-side poller's rows are in memory, so its
-    checkpoint is removed as soon as the polls finish; the parallel
-    poller's returned frame READS the staged parquet, so cleanup is
-    handed to ``defer_release`` — the same deferred-consumption
-    contract plan-level caches follow.
+    """Shared produce→consume→parse scaffold for the two incremental
+    Kinesis consume queries: the ``event_id <= event_cap`` events slice
+    is rendered into the generator's exact gzip'd service-log wire
+    format (timestream_kinesis_data_gen.py:24-36, 75-78; partition key =
+    account id) and produced in ``n_waves`` contiguous event_id waves to
+    a 4-shard in-process fake endpoint (real boto3 wire protocol,
+    500-record PutRecords chunks). After each wave one ``availableNow``
+    run of ``format("kinesis_py")`` consumes it into a parquet sink, all
+    runs sharing ONE checkpoint — so each run must resume exactly at the
+    offsets the previous run committed — and the sink's rows are
+    gunzipped and parsed back into points. The work directory is
+    removed through ``defer_release`` once the result is consumed.
     """
-    import gzip as _gzip
+    import os
     import shutil
     import tempfile
 
     from ..session import defer_release
-    from ..streaming.kinesis_dev import KinesisMicroBatchPoller
     from ..streaming.kinesis_fake import FakeKinesis
+    from ..streaming.kinesis_pysource import KinesisPythonDataSource
 
-    e = load_table(spark, sf_dir, "events").filter(F.col("event_id") <= event_cap)
-    rendered = e.select(
-        *_render_service_log(
-            [
-                F.lpad(F.col("user_id").cast("string"), 12, "0").alias("pk"),
-                F.pmod(F.col("event_id"), F.lit(n_waves)).alias("wave"),
-            ]
-        )
-    ).collect()
-    waves: dict[int, list] = {w: [] for w in range(n_waves)}
-    for r in rendered:
-        waves[int(r["wave"])].append((r["value"], r["pk"]))
-
-    ckpt = tempfile.mkdtemp(prefix=f"kinesis_{stream_name}_ckpt_")
-    if executor_parallel:
-        defer_release(lambda: shutil.rmtree(ckpt, ignore_errors=True))
-    batch_dfs = []
-    try:
-        with FakeKinesis() as fk:
-            import boto3
-
-            producer = boto3.client(
-                "kinesis",
-                endpoint_url=fk.endpoint_url,
-                region_name="us-east-1",
-                aws_access_key_id="test",
-                aws_secret_access_key="test",
+    spark.dataSource.register(KinesisPythonDataSource)
+    work = tempfile.mkdtemp(prefix=f"kinesis_{stream_name}_")
+    defer_release(lambda: shutil.rmtree(work, ignore_errors=True))
+    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
+    with FakeKinesis() as fk:
+        producer = _kinesis_producer(fk)
+        for w in range(n_waves):
+            _produce_rendered_events_to_fake(
+                spark,
+                sf_dir,
+                producer,
+                stream_name,
+                event_min=event_cap * w // n_waves if w else None,
+                event_cap=event_cap * (w + 1) // n_waves,
+                create_stream=w == 0,
             )
-            producer.create_stream(StreamName=stream_name, ShardCount=4)
-            if executor_parallel:
-                poller = KinesisMicroBatchPoller(
-                    spark,
-                    stream_name,
-                    checkpoint_dir=ckpt,
-                    region="us-east-1",
-                    endpoint_url=fk.endpoint_url,
-                    decode="gzip",
-                    interval_millis=0,
-                    executor_parallel=True,
-                    client_kwargs={
-                        "aws_access_key_id": "test",
-                        "aws_secret_access_key": "test",
-                    },
-                )
-            else:
-                poller = KinesisMicroBatchPoller(
-                    spark,
-                    stream_name,
-                    checkpoint_dir=ckpt,
-                    boto3_client=producer,
-                    decode="gzip",
-                    interval_millis=0,
-                )
-            for w in range(n_waves):
-                recs = [
-                    {"Data": _gzip.compress(v.encode()), "PartitionKey": pk}
-                    for v, pk in waves[w]
-                ]
-                for i in range(0, len(recs), 500):  # PutRecords API cap
-                    producer.put_records(
-                        StreamName=stream_name, Records=recs[i : i + 500]
-                    )
-                bid, df = poller.poll()
-                if executor_parallel:
-                    # honor the poller's consume-before-next-poll
-                    # contract for ANY n_waves: the returned frame READS
-                    # its staging parquet, which poll N+2's _gc_staging
-                    # deletes — pin the rows in executor storage and cut
-                    # the file lineage before polling again (released
-                    # via defer_release like every plan-level pin)
-                    df = df.localCheckpoint(eager=True)
-                    defer_release(df)
-                batch_dfs.append(df)
-                poller.commit(bid)
-    finally:
-        if not executor_parallel:
-            shutil.rmtree(ckpt, ignore_errors=True)
-
-    union = batch_dfs[0]
-    for df in batch_dfs[1:]:
-        union = union.unionAll(df)
-    parsed = parse_service_logs(union)
-    return parsed.select(*_POINT_COLS)
+            _consume_available_now(spark, fk, stream_name, out, ckpt)
+    return _kinesis_points(spark.read.parquet(out))
 
 
 @query(
@@ -299,16 +282,13 @@ def kinesis_incremental_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     (timestream_kinesis_data_gen.py:24-36, 75-78; partition key =
     account id) and produced in THREE waves to an in-process fake
     Kinesis endpoint (real boto3 wire protocol, 4 shards); the
-    jar-free ``KinesisMicroBatchPoller`` consumes them in three
-    incremental polls — persisted shard positions, commit-per-batch,
-    exactly-once boundaries — and the union of the three batches is
-    gunzipped and parsed back into points. The oracle is the identity
-    over the same events slice, so a record lost, duplicated, or
-    corrupted across ANY batch boundary hash-mismatches.
-
-    Driver-side produce/poll is the point here (this is the dev/proof
-    surface; production uses the connector where executors own shards
-    — streaming/source.py); decode + parse run as Spark plans.
+    registered ``kinesis_py`` source consumes them in three
+    ``availableNow`` runs over one checkpoint — engine-managed shard
+    positions, commit-per-batch, exactly-once resume — and the sink's
+    union of the three batches is gunzipped and parsed back into
+    points. The oracle is the identity over the same events slice, so a
+    record lost, duplicated, or corrupted across ANY batch boundary
+    hash-mismatches. Decode + parse run as Spark plans.
     """
     return _kinesis_produce_consume_roundtrip(
         spark,
@@ -316,7 +296,6 @@ def kinesis_incremental_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
         event_cap=1500,
         n_waves=3,
         stream_name="events-log",
-        executor_parallel=False,
     )
 
 
@@ -529,19 +508,18 @@ def kinesis_parallel_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     #2 — the scale shape of the reference's parallel subtask
     consumption, StreamingJob.java:98-106): the same gzip'd
     service-log wire format as ``kinesis_incremental_consume``,
-    produced in TWO waves to a 4-shard in-process fake endpoint, but
-    consumed with ``executor_parallel=True`` — each shard is drained
-    by its own mapInPandas task holding its own boto3 client, batches
-    stage to parquet under the checkpoint, and the driver only ever
-    collects the #shards-sized ledger rows. The oracle is the identity
-    over the same events slice, so any record lost, duplicated, or
-    corrupted across the task fan-out or a batch boundary
-    hash-mismatches.
+    produced in TWO waves to a 4-shard in-process fake endpoint and
+    consumed in two checkpointed ``kinesis_py`` runs — each shard of
+    each batch is drained by its own Spark task holding its own boto3
+    client, and the driver only ever lists shards. The oracle is the
+    identity over the same events slice, so any record lost,
+    duplicated, or corrupted across the task fan-out or a batch
+    boundary hash-mismatches.
 
-    The returned frame READS the staged parquet (data rows never pass
-    through the driver); the checkpoint dir is handed to
-    ``defer_release`` for removal once the consumer has collected —
-    the same deferred-consumption contract plan-level caches follow.
+    The returned frame READS the parquet sink (data rows never pass
+    through the driver); the work dir is handed to ``defer_release``
+    for removal once the consumer has collected — the same
+    deferred-consumption contract plan-level caches follow.
     """
     return _kinesis_produce_consume_roundtrip(
         spark,
@@ -549,7 +527,6 @@ def kinesis_parallel_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
         event_cap=1200,
         n_waves=2,
         stream_name="events-par",
-        executor_parallel=True,
     )
 
 
@@ -623,41 +600,25 @@ def kinesis_pysource_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     gunzipped, and parsed back into points. The oracle is the identity
     over the same events slice, so any record lost, duplicated, or
     corrupted through the source → micro-batch → sink path
-    hash-mismatches. Offset resume and failure replay
-    (``readBetweenOffsets``) are pinned by tests/test_kinesis_source.py.
+    hash-mismatches. Offset resume and failure replay are pinned by
+    tests/test_kinesis_source.py.
     """
     import os
 
     from ..session import defer_release
     from ..streaming.kinesis_fake import FakeKinesis
     from ..streaming.kinesis_pysource import KinesisPythonDataSource
-    from ..streaming.source import decode_payload
 
     spark.dataSource.register(KinesisPythonDataSource)
     sink = f"kinesis_pysource_sink_{os.getpid()}"
     with FakeKinesis() as fk:
-        import boto3
-
-        producer = boto3.client(
-            "kinesis",
-            endpoint_url=fk.endpoint_url,
-            region_name="us-east-1",
-            aws_access_key_id="test",
-            aws_secret_access_key="test",
-        )
+        producer = _kinesis_producer(fk)
         _produce_rendered_events_to_fake(
             spark, sf_dir, producer, "pysource-log", event_cap=1000
         )
-        stream_df = (
-            spark.readStream.format("kinesis_py")
-            .option("streamName", "pysource-log")
-            .option("endpointUrl", fk.endpoint_url)
-            .option("accessKeyId", "test")
-            .option("secretAccessKey", "test")
-            .load()
-        )
         q = (
-            stream_df.writeStream.format("memory")
+            _kinesis_py_stream(spark, fk, "pysource-log")
+            .writeStream.format("memory")
             .queryName(sink)
             .trigger(availableNow=True)
             .start()
@@ -665,10 +626,7 @@ def kinesis_pysource_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
     defer_release(lambda: spark.catalog.dropTempView(sink))
     raw = spark.table(sink)
-    parsed = parse_service_logs(
-        raw.select(decode_payload(F.col("data"), codec="gzip").alias("value"))
-    )
-    return parsed.select(*_POINT_COLS)
+    return _kinesis_points(raw)
 
 
 @query(
@@ -813,27 +771,17 @@ def kinesis_pysource_batch_snapshot(spark: SparkSession, sf_dir: str) -> DataFra
     shard (streaming/kinesis_pysource.py:KinesisBatchReader), so each
     of the 4 shards is drained by its own executor task with its own
     boto3 client — the production fan-out shape (1000 shards = 1000
-    parallel tasks, driver does metadata only), now through Spark's
-    public DataSource partition planning rather than the hand-rolled
-    mapInPandas poller. Records gunzip + parse back into points;
+    parallel tasks, driver does metadata only), through Spark's public
+    DataSource partition planning. Records gunzip + parse back into points;
     identity oracle. One-task-per-shard planning is pinned by
     tests/test_kinesis_source.py."""
     from ..session import defer_release
     from ..streaming.kinesis_fake import FakeKinesis
     from ..streaming.kinesis_pysource import KinesisPythonDataSource
-    from ..streaming.source import decode_payload
 
     spark.dataSource.register(KinesisPythonDataSource)
     with FakeKinesis() as fk:
-        import boto3
-
-        producer = boto3.client(
-            "kinesis",
-            endpoint_url=fk.endpoint_url,
-            region_name="us-east-1",
-            aws_access_key_id="test",
-            aws_secret_access_key="test",
-        )
+        producer = _kinesis_producer(fk)
         _produce_rendered_events_to_fake(
             spark, sf_dir, producer, "pysnap-log", event_cap=1000
         )
@@ -853,10 +801,7 @@ def kinesis_pysource_batch_snapshot(spark: SparkSession, sf_dir: str) -> DataFra
         # checkpoint pins executor storage for the session's lifetime)
         raw = raw.localCheckpoint(eager=True)
         defer_release(raw)
-    parsed = parse_service_logs(
-        raw.select(decode_payload(F.col("data"), codec="gzip").alias("value"))
-    )
-    return parsed.select(*_POINT_COLS)
+    return _kinesis_points(raw)
 
 
 @query(
@@ -912,39 +857,18 @@ def kinesis_pysource_latest_resume(spark: SparkSession, sf_dir: str) -> DataFram
     from ..session import defer_release
     from ..streaming.kinesis_fake import FakeKinesis
     from ..streaming.kinesis_pysource import KinesisPythonDataSource
-    from ..streaming.source import decode_payload
 
     spark.dataSource.register(KinesisPythonDataSource)
     work = tempfile.mkdtemp(prefix="kinesis_pysource_latest_")
     defer_release(lambda: shutil.rmtree(work, ignore_errors=True))
     out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
     with FakeKinesis() as fk:
-        import boto3
-
-        producer = boto3.client(
-            "kinesis",
-            endpoint_url=fk.endpoint_url,
-            region_name="us-east-1",
-            aws_access_key_id="test",
-            aws_secret_access_key="test",
-        )
+        producer = _kinesis_producer(fk)
 
         def run_to_termination() -> None:
-            q = (
-                spark.readStream.format("kinesis_py")
-                .option("streamName", "pysource-latest")
-                .option("endpointUrl", fk.endpoint_url)
-                .option("accessKeyId", "test")
-                .option("secretAccessKey", "test")
-                .option("initialPosition", "LATEST")
-                .load()
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            _consume_available_now(
+                spark, fk, "pysource-latest", out, ckpt, initialPosition="LATEST"
             )
-            assert q.awaitTermination(300), "kinesis_py query did not terminate"
 
         _produce_rendered_events_to_fake(
             spark, sf_dir, producer, "pysource-latest", event_cap=500
@@ -971,10 +895,7 @@ def kinesis_pysource_latest_resume(spark: SparkSession, sf_dir: str) -> DataFram
         )
         run_to_termination()  # resumes from the checkpointed anchors
     raw = spark.read.parquet(out)
-    parsed = parse_service_logs(
-        raw.select(decode_payload(F.col("data"), codec="gzip").alias("value"))
-    )
-    return parsed.select(*_POINT_COLS)
+    return _kinesis_points(raw)
 
 
 @query(
@@ -1029,39 +950,16 @@ def kinesis_pysource_reshard_resume(spark: SparkSession, sf_dir: str) -> DataFra
     from ..session import defer_release
     from ..streaming.kinesis_fake import FakeKinesis
     from ..streaming.kinesis_pysource import KinesisPythonDataSource
-    from ..streaming.source import decode_payload
 
     spark.dataSource.register(KinesisPythonDataSource)
     work = tempfile.mkdtemp(prefix="kinesis_pysource_reshard_")
     defer_release(lambda: shutil.rmtree(work, ignore_errors=True))
     out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
     with FakeKinesis() as fk:
-        import boto3
-
-        producer = boto3.client(
-            "kinesis",
-            endpoint_url=fk.endpoint_url,
-            region_name="us-east-1",
-            aws_access_key_id="test",
-            aws_secret_access_key="test",
-        )
+        producer = _kinesis_producer(fk)
 
         def run_to_termination() -> None:
-            q = (
-                spark.readStream.format("kinesis_py")
-                .option("streamName", "pysource-reshard")
-                .option("endpointUrl", fk.endpoint_url)
-                .option("accessKeyId", "test")
-                .option("secretAccessKey", "test")
-                .option("reader", "partitioned")
-                .load()
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            assert q.awaitTermination(300), "kinesis_py query did not terminate"
+            _consume_available_now(spark, fk, "pysource-reshard", out, ckpt)
 
         _produce_rendered_events_to_fake(
             spark, sf_dir, producer, "pysource-reshard", event_cap=400
@@ -1098,10 +996,7 @@ def kinesis_pysource_reshard_resume(spark: SparkSession, sf_dir: str) -> DataFra
         )
         run_to_termination()  # tombstone-drains the parent, admits children
     raw = spark.read.parquet(out)
-    parsed = parse_service_logs(
-        raw.select(decode_payload(F.col("data"), codec="gzip").alias("value"))
-    )
-    return parsed.select(*_POINT_COLS)
+    return _kinesis_points(raw)
 
 
 @query(
@@ -1133,17 +1028,16 @@ def kinesis_pysource_reshard_resume(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def kinesis_pysource_partitioned_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXECUTOR-PARALLEL STREAMING consumption through the registered
-    source (VERDICT r8 #3 — the full ``DataSourceStreamReader``,
-    ``option("reader", "partitioned")``): per trigger the driver does
-    METADATA-ONLY work — one ListShards call plus a whole-second
-    arrival-time boundary, never a GetRecords (VERDICT r9 #2: driver
-    transfer is O(shards), not O(records))
+    source (VERDICT r8 #3 — the full ``DataSourceStreamReader``): per
+    trigger the driver does METADATA-ONLY work — one ListShards call
+    plus a whole-second arrival-time boundary, never a GetRecords
+    (VERDICT r9 #2: driver transfer is O(shards), not O(records))
     (streaming/kinesis_pysource.py:KinesisPartitionedStreamReader), and
     ONE Spark input partition per shard drains its exact arrival-time
     interval ``[position(T_prev), position(T_cur))`` on an executor
-    with its own boto3 client — the shards-fan-out scale shape of
-    ``kinesis_dev.py``'s parallel poller, now with engine-managed
-    offsets and engine failure replay. Identity oracle over the
+    with its own boto3 client — the shards-fan-out scale shape of the
+    reference's parallel subtasks, with engine-managed offsets and
+    engine failure replay. Identity oracle over the
     produced slice: a record lost, duplicated, or reordered across the
     boundary planning → executor drain path hash-mismatches.
     One-task-per-shard planning, metadata-only latestOffset, and
@@ -1153,31 +1047,16 @@ def kinesis_pysource_partitioned_consume(spark: SparkSession, sf_dir: str) -> Da
     from ..session import defer_release
     from ..streaming.kinesis_fake import FakeKinesis
     from ..streaming.kinesis_pysource import KinesisPythonDataSource
-    from ..streaming.source import decode_payload
 
     spark.dataSource.register(KinesisPythonDataSource)
     sink = f"kinesis_pysource_part_sink_{os.getpid()}"
     with FakeKinesis() as fk:
-        import boto3
-
-        producer = boto3.client(
-            "kinesis",
-            endpoint_url=fk.endpoint_url,
-            region_name="us-east-1",
-            aws_access_key_id="test",
-            aws_secret_access_key="test",
-        )
+        producer = _kinesis_producer(fk)
         _produce_rendered_events_to_fake(
             spark, sf_dir, producer, "pysource-part", event_cap=1000
         )
         q = (
-            spark.readStream.format("kinesis_py")
-            .option("streamName", "pysource-part")
-            .option("endpointUrl", fk.endpoint_url)
-            .option("accessKeyId", "test")
-            .option("secretAccessKey", "test")
-            .option("reader", "partitioned")
-            .load()
+            _kinesis_py_stream(spark, fk, "pysource-part")
             .writeStream.format("memory")
             .queryName(sink)
             .trigger(availableNow=True)
@@ -1186,7 +1065,4 @@ def kinesis_pysource_partitioned_consume(spark: SparkSession, sf_dir: str) -> Da
         assert q.awaitTermination(300), "kinesis_py query did not terminate"
     defer_release(lambda: spark.catalog.dropTempView(sink))
     raw = spark.table(sink)
-    parsed = parse_service_logs(
-        raw.select(decode_payload(F.col("data"), codec="gzip").alias("value"))
-    )
-    return parsed.select(*_POINT_COLS)
+    return _kinesis_points(raw)

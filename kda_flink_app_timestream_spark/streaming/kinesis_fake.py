@@ -3,12 +3,12 @@
 Implements just enough of the public wire protocol
 (application/x-amz-json-1.1, ``X-Amz-Target: Kinesis_20131202.<Op>``)
 for boto3 to create streams, put records, drain shards, and RESHARD —
-so the engine's consumer paths (one-shot snapshot and the incremental
-micro-batch poller, ``kinesis_dev.py``) run REAL produce→consume
-round-trips in any sandbox, including shard split/merge lifecycles
-(the scaling events the reference's live stream would undergo;
-StreamingJob.java:74-110 consumes through the Flink connector, which
-handles the same lifecycle via the same public API).
+so the engine's consumer, the ``kinesis_py`` source
+(``kinesis_pysource.py``: batch snapshot and streaming reader), runs
+REAL produce→consume round-trips in any sandbox, including shard
+split/merge lifecycles (the scaling events the reference's live stream
+would undergo; StreamingJob.java:74-110 consumes through the Flink
+connector, which handles the same lifecycle via the same public API).
 
 Shard routing follows the real service: md5(partition_key) mapped into
 per-shard 128-bit hash ranges, over OPEN shards only. ``SplitShard``

@@ -7,6 +7,8 @@ Here the source is a factory keyed by kind:
 
 - ``kinesis``  — production path via the Kinesis Structured Streaming
   connector (connector jar not present in this environment; gated).
+  The jar-free consumer of the same stream is the registered
+  ``format("kinesis_py")`` source (``streaming/kinesis_pysource.py``).
 - ``file``     — parquet/json/text directory stream (tests, replay).
 - ``rate``     — synthetic generator reproducing the reference's data
   generator (sources/generator.py).

@@ -6,12 +6,12 @@ Three layers of coverage, by what the environment allows:
    the way to Spark's connector lookup (the jar is absent here), and
    the poll tuning must mirror the reference's consumer config.
 2. **Always (r4)** — a REAL produce→consume round-trip through the
-   boto3-backed dev consumer (``streaming/kinesis_dev.py``) against a
-   vendored in-process fake of the public Kinesis HTTP API
-   (``tests/fake_kinesis.py``): gzip'd reference-format records go in
-   via ``PutRecords``, come back out via shard iterators, gunzip, and
-   parse — the produce→consume semantics the reference validates only
-   manually (README.md:33-36), now executed in-sandbox.
+   ``kinesis_py`` batch snapshot against a vendored in-process fake of
+   the public Kinesis HTTP API (``tests/fake_kinesis.py``): gzip'd
+   reference-format records go in via ``PutRecords``, come back out
+   via shard iterators, gunzip, and parse — the produce→consume
+   semantics the reference validates only manually (README.md:33-36),
+   now executed in-sandbox.
 3. **Env-gated** — the same round-trip through the Spark CONNECTOR
    (``streaming_source(kind="kinesis")``) against a real
    kinesalite/LocalStack endpoint with the connector jar on the
@@ -20,12 +20,15 @@ Three layers of coverage, by what the environment allows:
 4. **Always (driver-r8)** — a REAL registered Spark source without any
    jar: ``format("kinesis_py")`` via Spark 4's public Python DataSource
    API (``streaming/kinesis_pysource.py``) — engine-managed offsets,
-   checkpoint restart exactly-once, readBetweenOffsets failure replay —
-   all executed against the in-process fake endpoint.
+   checkpoint restart exactly-once, failure replay from offset bounds,
+   resharding — all executed against the in-process fake endpoint.
+   Reader-contract tests drive ``initialOffset`` / ``latestOffset`` /
+   ``partitions`` / ``read`` directly under a virtual clock.
 """
 
 from __future__ import annotations
 
+import contextlib
 import gzip
 import os
 
@@ -183,16 +186,104 @@ def _fake_client(fk):
     )
 
 
+@contextlib.contextmanager
+def _virtual_fake(start: float):
+    """In-process fake endpoint whose arrival stamps and the reader's
+    boundary clock are one ``_VClock``; yields ``(clock, fk)``."""
+    from unittest import mock
+
+    from kda_flink_app_timestream_spark.streaming import kinesis_fake
+    from kda_flink_app_timestream_spark.streaming import kinesis_pysource as kps
+
+    clock = _VClock(start)
+    with mock.patch.object(kinesis_fake, "time", clock), mock.patch.object(
+        kps, "time", clock
+    ), kinesis_fake.FakeKinesis() as fk:
+        yield clock, fk
+
+
+def _reader(fk, stream: str, **options):
+    """The streaming reader on the fake endpoint (lower-cased options)."""
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
+        KinesisPartitionedStreamReader,
+    )
+
+    return KinesisPartitionedStreamReader(
+        {
+            "streamname": stream,
+            "endpointurl": fk.endpoint_url,
+            "accesskeyid": "t",
+            "secretaccesskey": "t",
+            **options,
+        }
+    )
+
+
+def _batch(reader, start: dict, end: dict) -> list[tuple]:
+    """One micro-batch the way the engine runs it: plan, then drain
+    every partition."""
+    return [r for p in reader.partitions(start, end) for r in reader.read(p)]
+
+
+def _payloads(rows) -> list[str]:
+    return [bytes(r[0]).decode() for r in rows]
+
+
+def _snapshot(spark, fk, stream: str, **options):
+    """``spark.read.format("kinesis_py")`` on the fake endpoint."""
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
+        KinesisPythonDataSource,
+    )
+
+    spark.dataSource.register(KinesisPythonDataSource)
+    reader = (
+        spark.read.format("kinesis_py")
+        .option("streamName", stream)
+        .option("endpointUrl", fk.endpoint_url)
+        .option("accessKeyId", "test")
+        .option("secretAccessKey", "test")
+    )
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    return reader.load()
+
+
+def _consume_available_now(spark, fk, stream: str, out: str, ckpt: str) -> list:
+    """One availableNow run of ``kinesis_py`` into a parquet sink; returns
+    everything the sink holds afterwards."""
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
+        KinesisPythonDataSource,
+    )
+
+    spark.dataSource.register(KinesisPythonDataSource)
+    q = (
+        spark.readStream.format("kinesis_py")
+        .option("streamName", stream)
+        .option("endpointUrl", fk.endpoint_url)
+        .option("accessKeyId", "test")
+        .option("secretAccessKey", "test")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "query did not terminate in 120s"
+    return spark.read.parquet(out).collect()
+
+
 def test_kinesis_roundtrip_against_in_process_fake_endpoint(spark):
     """Produce→consume round-trip with the reference's exact wire
     semantics: gzip'd multi-line service-log blobs keyed by account id
     (timestream_kinesis_data_gen.py:75-78) through a 2-shard stream,
-    drained by the dev consumer, gunzipped, and parsed."""
+    drained by the ``kinesis_py`` batch snapshot, gunzipped, and
+    parsed."""
+    from pyspark.sql import functions as SF
+
     from kda_flink_app_timestream_spark.functions.parse import parse_service_logs
     from kda_flink_app_timestream_spark.sources.generator import service_log_batch
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        kinesis_snapshot_read,
-    )
+    from kda_flink_app_timestream_spark.streaming.source import decode_payload
 
     from .fake_kinesis import FakeKinesis
 
@@ -213,26 +304,23 @@ def test_kinesis_roundtrip_against_in_process_fake_endpoint(spark):
                 for v, pk in produced
             ],
         )
-        df = kinesis_snapshot_read(
-            spark,
-            "svc-logs",
-            boto3_client=client,
-            decode="gzip",
-        ).cache()
+        df = (
+            _snapshot(spark, fk, "svc-logs")
+            .withColumn("value", decode_payload(SF.col("data"), codec="gzip"))
+            .cache()
+        )
 
         rows = df.collect()
         assert sorted(r["value"] for r in rows) == sorted(v for v, _ in produced)
         # both shards carried data and per-shard order is preserved
         by_shard = {}
         for r in rows:
-            by_shard.setdefault(r["shard_id"], []).append(int(r["sequence_number"]))
+            by_shard.setdefault(r["shardId"], []).append(int(r["sequenceNumber"]))
         assert len(by_shard) == 2, f"expected 2 shards, got {list(by_shard)}"
         for seqs in by_shard.values():
             assert seqs == sorted(seqs)
         # partition key routing is consistent: one shard per key
-        key_shards = {
-            (r["partition_key"], r["shard_id"]) for r in rows
-        }
+        key_shards = {(r["partitionKey"], r["shardId"]) for r in rows}
         keys = {k for k, _ in key_shards}
         assert len(key_shards) == len(keys)
 
@@ -241,16 +329,13 @@ def test_kinesis_roundtrip_against_in_process_fake_endpoint(spark):
         parsed = parse_service_logs(df)
         assert parsed.count() == len(produced)
         assert parsed.filter("measure_value_double IS NULL").count() == 0
+        df.unpersist()
 
 
 def test_kinesis_snapshot_paginates_get_records(spark):
     """A shard deeper than one GetRecords page must be drained across
     multiple calls (the reference polls 10000/call; here 7/call over 25
     records forces 4+ pages)."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        kinesis_snapshot_read,
-    )
-
     from .fake_kinesis import FakeKinesis
 
     with FakeKinesis() as fk:
@@ -260,20 +345,22 @@ def test_kinesis_snapshot_paginates_get_records(spark):
             client.put_record(
                 StreamName="deep", Data=f"rec-{i:02d}".encode(), PartitionKey="k"
             )
-        df = kinesis_snapshot_read(
-            spark, "deep", boto3_client=client, max_records_per_get=7
-        )
-        got = sorted(r["value"] for r in df.collect())
-        assert got == [f"rec-{i:02d}" for i in range(25)]
+        rows = _snapshot(
+            spark, fk, "deep", maxFetchRecordsPerShard="7"
+        ).collect()
+        assert sorted(_payloads(rows)) == [f"rec-{i:02d}" for i in range(25)]
+        limits = [limit for _shard, limit in fk.get_records_log]
+        assert len(limits) >= 4 and set(limits) == {7}, limits
 
 
 def test_kinesis_snapshot_utf8_when_not_decoding(spark):
-    """decode='none' must honor the connector contract (CAST(data AS
+    """Without a decode the connector contract holds (CAST(data AS
     STRING) = UTF-8): non-ASCII payloads come back as real text, not
-    latin-1 mojibake; the gzip path still round-trips bytes exactly."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        kinesis_snapshot_read,
-    )
+    latin-1 mojibake; the gzip decode path still round-trips bytes
+    exactly."""
+    from pyspark.sql import functions as SF
+
+    from kda_flink_app_timestream_spark.streaming.source import decode_payload
 
     from .fake_kinesis import FakeKinesis
 
@@ -285,28 +372,26 @@ def test_kinesis_snapshot_utf8_when_not_decoding(spark):
         client.put_record(
             StreamName="u8", Data=gzip.compress(text.encode("utf-8")), PartitionKey="k"
         )
-        plain = kinesis_snapshot_read(spark, "u8", boto3_client=client).collect()
-        assert plain[0]["value"] == text
-        decoded = kinesis_snapshot_read(
-            spark, "u8", boto3_client=client, decode="gzip"
-        ).collect()
-        assert decoded[1]["value"] == text
+        df = _snapshot(spark, fk, "u8").orderBy(
+            SF.col("sequenceNumber").cast("long")
+        )
+        plain = df.select(SF.col("data").cast("string").alias("v")).collect()
+        assert plain[0]["v"] == text
+        decoded = df.select(decode_payload(SF.col("data"), codec="gzip").alias("v"))
+        assert decoded.collect()[1]["v"] == text
 
 
-def test_incremental_poller_three_polls_exactly_once(spark, tmp_path):
-    """The CONTINUOUS jar-free consumer (VERDICT r4 #1): three produce
-    waves, three incremental polls — each batch contains exactly the
-    new records, the union equals a batch-oracle snapshot of the whole
-    stream, and an uncommitted batch replays byte-identically (even
+def test_incremental_poller_three_polls_exactly_once():
+    """The continuous consumer contract: three produce waves, three
+    micro-batches — each batch contains exactly the new records, the
+    union equals a batch snapshot of the whole stream, and an
+    uncommitted batch replays identically on a restarted reader (even
     when newer records arrived in between) before the stream advances."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-        kinesis_snapshot_read,
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
+        KinesisBatchReader,
     )
 
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
+    with _virtual_fake(1_700_000_000.3) as (_clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="inc", ShardCount=2)
 
@@ -318,83 +403,60 @@ def test_incremental_poller_three_polls_exactly_once(spark, tmp_path):
                     for i in range(n)
                 ],
             )
+            return sorted(f"{tag}-{i}" for i in range(n))
 
-        poller = KinesisMicroBatchPoller(
-            spark,
-            "inc",
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            boto3_client=client,
-            interval_millis=0,
-        )
-
-        batches = {}
+        reader = _reader(fk, "inc")
+        offsets = reader.initialOffset()
+        consumed = []
         for wave, n in (("a", 12), ("b", 7), ("c", 9)):
-            put_wave(wave, n)
-            bid, df = poller.poll()
-            batches[bid] = sorted(r["value"] for r in df.collect())
-            poller.commit(bid)
-
-        assert list(batches) == [0, 1, 2]
-        assert batches[0] == sorted(f"a-{i}" for i in range(12))
-        assert batches[1] == sorted(f"b-{i}" for i in range(7))
-        assert batches[2] == sorted(f"c-{i}" for i in range(9))
+            expected = put_wave(wave, n)
+            end = reader.latestOffset()
+            batch = sorted(_payloads(_batch(reader, offsets, end)))
+            assert batch == expected
+            consumed += batch
+            offsets = end
 
         # batch oracle: the union of incremental batches IS the stream
-        snapshot = sorted(
-            r["value"]
-            for r in kinesis_snapshot_read(spark, "inc", boto3_client=client).collect()
+        snap = KinesisBatchReader(
+            {
+                "streamName": "inc",
+                "endpointUrl": fk.endpoint_url,
+                "accessKeyId": "t",
+                "secretAccessKey": "t",
+            }
         )
-        assert snapshot == sorted(v for vs in batches.values() for v in vs)
+        snapshot = [r for p in snap.partitions() for r in snap.read(p)]
+        assert sorted(_payloads(snapshot)) == sorted(consumed)
 
-        # exactly-once boundary: batch 3 polled but NOT committed, new
-        # records arrive, a recovered poller re-delivers batch 3 with
-        # its ORIGINAL membership; wave e lands in batch 4
-        put_wave("d", 5)
-        bid3, df3 = poller.poll()
-        original = sorted(r["value"] for r in df3.collect())
-        assert original == sorted(f"d-{i}" for i in range(5))
-        put_wave("e", 4)
-
-        recovered = KinesisMicroBatchPoller(
-            spark,
-            "inc",
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            boto3_client=client,
-            interval_millis=0,
-        )
-        rbid, rdf = recovered.poll()
-        assert rbid == bid3 == 3
-        assert sorted(r["value"] for r in rdf.collect()) == original
-        recovered.commit(rbid)
-        bid4, df4 = recovered.poll()
-        assert bid4 == 4
-        assert sorted(r["value"] for r in df4.collect()) == sorted(
-            f"e-{i}" for i in range(4)
-        )
+        # exactly-once boundary: batch 3 is planned but NOT committed,
+        # new records arrive, a restarted reader re-delivers batch 3
+        # from its logged offsets with its ORIGINAL membership; wave e
+        # lands in batch 4
+        expected_d = put_wave("d", 5)
+        end3 = reader.latestOffset()
+        assert sorted(_payloads(_batch(reader, offsets, end3))) == expected_d
+        expected_e = put_wave("e", 4)
+        restarted = _reader(fk, "inc")
+        assert sorted(_payloads(_batch(restarted, offsets, end3))) == expected_d
+        end4 = restarted.latestOffset()
+        assert sorted(_payloads(_batch(restarted, end3, end4))) == expected_e
 
 
-def test_incremental_poller_resharding_split_then_merge(spark, tmp_path):
-    """Reshard lifecycle through the poll loop: records before a
-    SplitShard, after it (routed to the children), and after a
+def test_incremental_poller_resharding_split_then_merge():
+    """Reshard lifecycle through the streaming reader: records before a
+    SplitShard (some already consumed, some still undrained in the
+    parent), after it (routed to the children), and after a
     MergeShards of the children — every record consumed exactly once,
-    children admitted only after their parents are drained+retired
-    (the KCL/connector parent-before-child ordering rule)."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
+    each closed parent's remainder drained in a batch no later than
+    its children's first records, and retired shards never planned
+    again."""
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import CLOSED
 
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
+    with _virtual_fake(1_700_000_100.3) as (_clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="resh", ShardCount=1)
-        poller = KinesisMicroBatchPoller(
-            spark,
-            "resh",
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            boto3_client=client,
-            interval_millis=0,
-        )
+        reader = _reader(fk, "resh")
+        offsets = reader.initialOffset()
 
         def put(tag, n):
             client.put_records(
@@ -405,213 +467,59 @@ def test_incremental_poller_resharding_split_then_merge(spark, tmp_path):
                 ],
             )
 
-        put("pre", 8)
-        parent = client.list_shards(StreamName="resh")["Shards"][0]
-        mid = (1 << 127)  # split the full range at the midpoint
+        def read():
+            nonlocal offsets
+            end = reader.latestOffset()
+            parts = reader.partitions(offsets, end)
+            rows = [r for p in parts for r in reader.read(p)]
+            offsets = end
+            return sorted(p.shard_id for p in parts), sorted(_payloads(rows))
 
+        put("pre", 8)
+        _, got = read()
+        assert got == sorted(f"pre-{i}" for i in range(8))
+        put("undrained", 4)
+        (parent,) = offsets
         client.split_shard(
             StreamName="resh",
-            ShardToSplit=parent["ShardId"],
-            NewStartingHashKey=str(mid),
+            ShardToSplit=parent,
+            NewStartingHashKey=str(1 << 127),  # the full range's midpoint
         )
-        put("post", 10)  # routes to the two children
+        put("post", 10)
+        planned, got = read()
+        # the parent's closing batch and the children's first batch are
+        # ONE batch: no child record can overtake a parent record
+        assert got == sorted(
+            [f"undrained-{i}" for i in range(4)] + [f"post-{i}" for i in range(10)]
+        )
+        assert offsets[parent].startswith(CLOSED), offsets
+        children = [s for s in offsets if s != parent]
+        assert len(children) == 2 and planned == sorted([parent, *children])
 
-        bid0, df0 = poller.poll()
-        poller.commit(bid0)
-        got0 = sorted(r["value"] for r in df0.collect())
-        # parent drained in this poll; children were admitted in the same
-        # discovery pass only if the parent was already retired — the
-        # parent retires DURING this poll, so children may land here or
-        # in the next poll; either way nothing is lost or duplicated
-        bid1, df1 = poller.poll()
-        poller.commit(bid1)
-        got1 = sorted(r["value"] for r in df1.collect())
-        all_so_far = sorted(got0 + got1)
-        assert all_so_far == sorted(
-            [f"pre-{i}" for i in range(8)] + [f"post-{i}" for i in range(10)]
-        )
-        # the parent's records were read before any child's (retired
-        # parent precedes child admission across polls)
-        assert got0[:1] and set(got0[:8]) >= {f"pre-{i}" for i in range(8)} or (
-            set(got0) == {f"pre-{i}" for i in range(8)}
-        )
-
-        shards = client.list_shards(StreamName="resh")["Shards"]
-        children = [
-            s
-            for s in shards
-            if s.get("ParentShardId") == parent["ShardId"]
-            and "EndingSequenceNumber" not in s["SequenceNumberRange"]
-        ]
-        assert len(children) == 2
         client.merge_shards(
             StreamName="resh",
-            ShardToMerge=children[0]["ShardId"],
-            AdjacentShardToMerge=children[1]["ShardId"],
+            ShardToMerge=children[0],
+            AdjacentShardToMerge=children[1],
         )
         put("merged", 6)
-
-        collected = []
-        for _ in range(3):  # children drain, then the merged shard admits
-            bid, df = poller.poll()
-            poller.commit(bid)
-            collected += [r["value"] for r in df.collect()]
-        assert sorted(collected) == sorted(f"merged-{i}" for i in range(6))
-
-
-def test_incremental_poller_stall_guard(spark, tmp_path):
-    """A throttled endpoint that keeps returning empty pages with no
-    MillisBehindLatest progress must fail LOUDLY (the checkpoint wasn't
-    advanced, so the next poll retries cleanly) — never spin forever."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    class StuckClient:
-        def list_shards(self, **kw):
-            return {"Shards": [{"ShardId": "shardId-000000000000"}]}
-
-        def get_shard_iterator(self, **kw):
-            return {"ShardIterator": "it0"}
-
-        def get_records(self, **kw):
-            return {
-                "Records": [],
-                "NextShardIterator": "it0",
-                "MillisBehindLatest": 5000,  # forever behind, never progresses
-            }
-
-    poller = KinesisMicroBatchPoller(
-        spark,
-        "stuck",
-        checkpoint_dir=str(tmp_path / "ck"),
-        boto3_client=StuckClient(),
-        interval_millis=0,
-    )
-    with pytest.raises(RuntimeError, match="stalled on shard"):
-        poller.poll()
-    # nothing was checkpointed: recovery starts batch 0 from scratch
-    import os
-
-    assert os.listdir(str(tmp_path / "ck" / "offsets")) == []
+        planned, got = read()
+        assert got == sorted(f"merged-{i}" for i in range(6))
+        assert all(offsets[c].startswith(CLOSED) for c in children), offsets
+        assert parent not in planned
+        # retired shards are never planned again, and nothing re-arrives
+        planned, got = read()
+        assert got == [] and not set(planned) & {parent, *children}
 
 
-class _LimitSpy:
-    """Delegating wrapper that records the Limit of every GetRecords."""
-
-    def __init__(self, client):
-        self._client = client
-        self.limits: list[int] = []
-
-    def get_records(self, **kw):
-        self.limits.append(kw.get("Limit"))
-        return self._client.get_records(**kw)
-
-    def __getattr__(self, name):
-        return getattr(self._client, name)
-
-
-def test_adapt_limit_formula():
-    """SHARD_USE_ADAPTIVE_READS sizing (StreamingJob.java:84-89): next
-    Limit = 2 MiB/s * interval / avg_record_size, clamped to
-    [1, SHARD_GETRECORDS_MAX]; an empty batch keeps the current limit."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        SHARD_GETRECORDS_MAX,
-        _adapt_limit,
-    )
-
-    # 2048-byte records at a 1 s interval -> 2 MiB / 2 KiB = 1024
-    assert _adapt_limit(10 * 2048, 10, 1000, 10000) == 1024
-    # halve the interval -> half the budget per fetch
-    assert _adapt_limit(10 * 2048, 10, 500, 10000) == 512
-    # tiny records would exceed the API max -> clamped down
-    assert _adapt_limit(100 * 10, 100, 1000, 10000) == SHARD_GETRECORDS_MAX
-    # huge records -> floor of 1
-    assert _adapt_limit(4 * (4 << 20), 4, 1000, 10000) == 1
-    # no size signal -> unchanged
-    assert _adapt_limit(0, 0, 1000, 777) == 777
-    # no poll interval (unpaced dev/test drain) -> no byte budget to
-    # size against; keep current instead of collapsing to Limit=1
-    assert _adapt_limit(10 * 2048, 10, 0, 10000) == 10000
-
-
-def test_incremental_poller_adaptive_reads(spark, tmp_path):
-    """Adaptive mode end-to-end on the fake endpoint: the first fetch
-    goes out at the API max, then each shard's Limit re-sizes from the
-    observed average record size — growing records shrink it further —
-    while fixed mode never deviates from SHARD_GETRECORDS_MAX."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
+def test_executor_parallel_stream_matches_batch_snapshot(spark, tmp_path):
+    """The two executor-parallel paths of ``kinesis_py`` share one
+    drain: a streaming availableNow run over a 4-shard stream lands
+    exactly the (shard, sequence, payload) set the batch snapshot
+    reads, a second run from the same checkpoint adds exactly the late
+    records, and a third run with nothing new adds nothing."""
     from .fake_kinesis import FakeKinesis
 
-    with FakeKinesis() as fk:
-        spy = _LimitSpy(_fake_client(fk))
-        spy.create_stream(StreamName="adapt", ShardCount=1)
-
-        def put(size, n):
-            spy.put_records(
-                StreamName="adapt",
-                Records=[
-                    {"Data": b"x" * size, "PartitionKey": f"k{i}"}
-                    for i in range(n)
-                ],
-            )
-
-        poller = KinesisMicroBatchPoller(
-            spark,
-            "adapt",
-            checkpoint_dir=str(tmp_path / "ck"),
-            boto3_client=spy,
-            interval_millis=1000,  # the reference default the sizing targets
-            use_adaptive_reads=True,
-        )
-        put(2048, 10)
-        bid, df = poller.poll()
-        poller.commit(bid)
-        assert df.count() == 10
-        # first call had no size signal -> API max; the observed 2 KiB
-        # average then sizes the budget to 2 MiB / 2 KiB = 1024
-        assert spy.limits[0] == 10000
-        assert poller._shard_limits["shardId-000000000000"] == 1024
-
-        put(64 * 1024, 3)  # bigger records -> limit shrinks to 32
-        bid, df = poller.poll()
-        poller.commit(bid)
-        assert df.count() == 3
-        assert spy.limits[-1] == 1024  # this poll USED the adapted limit
-        assert poller._shard_limits["shardId-000000000000"] == 32
-
-        # fixed mode (the reference's else-branch) never adapts
-        spy2 = _LimitSpy(_fake_client(fk))
-        fixed = KinesisMicroBatchPoller(
-            spark,
-            "adapt",
-            checkpoint_dir=str(tmp_path / "ck2"),
-            boto3_client=spy2,
-            interval_millis=0,
-        )
-        bid, df = fixed.poll()
-        fixed.commit(bid)
-        assert df.count() == 13
-        assert set(spy2.limits) == {10000}
-
-
-def test_executor_parallel_poller_matches_driver_poller(spark, tmp_path):
-    """VERDICT r5 #2: the executor-parallel read (mapInPandas shard
-    fan-out, staged batches) must produce IDENTICAL membership to the
-    driver-side poller on a 4-shard stream, preserve per-shard
-    sequence ordering, keep incremental semantics across polls, and
-    replay an uncommitted batch byte-identically from staging."""
-    import gzip as _gzip
-
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
     with FakeKinesis() as fk:
         client = _fake_client(fk)
         client.create_stream(StreamName="par", ShardCount=4)
@@ -620,471 +528,54 @@ def test_executor_parallel_poller_matches_driver_poller(spark, tmp_path):
             client.put_records(
                 StreamName="par",
                 Records=[
-                    {
-                        "Data": _gzip.compress(f"{tag}-{i}".encode()),
-                        "PartitionKey": f"key-{i}",
-                    }
+                    {"Data": f"{tag}-{i}".encode(), "PartitionKey": f"key-{i}"}
                     for i in range(n)
                 ],
             )
 
-        common = dict(
-            region="us-east-1",
-            endpoint_url=fk.endpoint_url,
-            decode="gzip",
-            interval_millis=0,
-            client_kwargs={
-                "aws_access_key_id": "test",
-                "aws_secret_access_key": "test",
-            },
-        )
-        driver_poller = KinesisMicroBatchPoller(
-            spark, "par", checkpoint_dir=str(tmp_path / "drv"), **common
-        )
-        par_poller = KinesisMicroBatchPoller(
-            spark,
-            "par",
-            checkpoint_dir=str(tmp_path / "par"),
-            executor_parallel=True,
-            **common,
-        )
+        def key(r):
+            return (r["shardId"], int(r["sequenceNumber"]), bytes(r["data"]))
 
         put("a", 40)
-        bid_d, df_d = driver_poller.poll()
-        bid_p, df_p = par_poller.poll()
-        rows_d = df_d.select("value", "shard_id", "sequence_number").collect()
-        rows_p = df_p.select("value", "shard_id", "sequence_number").collect()
-        key = lambda r: (r["shard_id"], int(r["sequence_number"]), r["value"])  # noqa: E731
-        assert sorted(map(key, rows_p)) == sorted(map(key, rows_d))
-        assert len(rows_p) == 40
+        streamed = _consume_available_now(spark, fk, "par", out, ckpt)
+        snapshot = _snapshot(spark, fk, "par").collect()
+        assert sorted(map(key, streamed)) == sorted(map(key, snapshot))
+        assert len(streamed) == 40
         # all 4 shards actually carried data (the fan-out is real)
-        assert len({r["shard_id"] for r in rows_p}) == 4
-        # per-shard ordering: within each shard, rows come back in
-        # ascending sequence order (one task per shard, one parquet
-        # file per task — order is preserved end to end)
-        per_shard: dict[str, list[int]] = {}
-        for r in df_p.collect():
-            per_shard.setdefault(r["shard_id"], []).append(int(r["sequence_number"]))
-        for sid, seqs in per_shard.items():
-            assert seqs == sorted(seqs), f"shard {sid} out of order: {seqs}"
+        assert len({r["shardId"] for r in streamed}) == 4
 
-        # exactly-once: replay the UNCOMMITTED parallel batch — then new
-        # records arriving after the original read stay out of the replay
         put("late", 8)
-        rbid, rdf = par_poller.poll()
-        assert rbid == bid_p
-        assert sorted(map(key, rdf.select("value", "shard_id", "sequence_number").collect())) == sorted(
-            map(key, rows_p)
+        rows = _consume_available_now(spark, fk, "par", out, ckpt)
+        assert sorted(_payloads(rows)) == sorted(
+            [f"a-{i}" for i in range(40)] + [f"late-{i}" for i in range(8)]
         )
-        par_poller.commit(bid_p)
-        driver_poller.commit(bid_d)
-
-        # incremental second poll picks up exactly the late records
-        bid_p2, df_p2 = par_poller.poll()
-        assert bid_p2 == bid_p + 1
-        vals = sorted(r["value"] for r in df_p2.collect())
-        assert vals == sorted(f"late-{i}" for i in range(8))
-        par_poller.commit(bid_p2)
-
-        # empty incremental poll: no new data -> zero rows, same schema
-        bid_p3, df_p3 = par_poller.poll()
-        assert df_p3.count() == 0
-        assert df_p3.columns == df_p2.columns
-
-
-def test_executor_parallel_adaptive_limit_carry(spark, tmp_path):
-    """Adaptive reads in executor-parallel mode: each shard's ledger
-    meta row carries the adapted GetRecords Limit back to the driver,
-    which seeds the NEXT poll's executor fetches — the executor-side
-    twin of the driver poller's ``_shard_limits`` carry. Executor
-    clients can't be wrapped by the test, so the Limits actually sent
-    are asserted SERVER-side via the fake endpoint's request log."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="padapt", ShardCount=1)
-
-        def put(size, n):
-            client.put_records(
-                StreamName="padapt",
-                Records=[
-                    {"Data": b"x" * size, "PartitionKey": f"k{i}"}
-                    for i in range(n)
-                ],
-            )
-
-        poller = KinesisMicroBatchPoller(
-            spark,
-            "padapt",
-            checkpoint_dir=str(tmp_path / "ck"),
-            region="us-east-1",
-            endpoint_url=fk.endpoint_url,
-            interval_millis=1000,  # the reference default the sizing targets
-            use_adaptive_reads=True,
-            executor_parallel=True,
-            client_kwargs={
-                "aws_access_key_id": "test",
-                "aws_secret_access_key": "test",
-            },
-        )
-        put(2048, 10)
-        bid, df = poller.poll()
-        assert df.count() == 10
-        poller.commit(bid)
-        # first-ever fetch had no size signal -> API max went out; the
-        # observed 2 KiB average sized the carry to 2 MiB / 2 KiB = 1024
-        assert fk.get_records_log[0] == ("shardId-000000000000", 10000)
-        assert poller._shard_limits["shardId-000000000000"] == 1024
-
-        mark = len(fk.get_records_log)
-        put(64 * 1024, 3)  # bigger records -> limit shrinks to 32
-        bid2, df2 = poller.poll()
-        assert df2.count() == 3
-        poller.commit(bid2)
-        # the second poll's first executor fetch USED the carried limit
-        assert fk.get_records_log[mark] == ("shardId-000000000000", 1024)
-        assert poller._shard_limits["shardId-000000000000"] == 32
-
-
-def test_adaptive_limit_survives_restart(spark, tmp_path):
-    """A RESTARTED adaptive poller must seed its first fetch from the
-    limits persisted in the last offsets file — not re-start at the
-    10 000-record API max and overshoot the 2 MiB/s/shard sizing (the
-    same hazard the cross-poll carry closes, at process granularity).
-    Asserted server-side via the fake endpoint's per-request Limit
-    log."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="radapt", ShardCount=1)
-
-        def put(size, n):
-            client.put_records(
-                StreamName="radapt",
-                Records=[
-                    {"Data": b"x" * size, "PartitionKey": f"k{i}"}
-                    for i in range(n)
-                ],
-            )
-
-        common = dict(
-            region="us-east-1",
-            endpoint_url=fk.endpoint_url,
-            interval_millis=1000,
-            use_adaptive_reads=True,
-            boto3_client=client,
-        )
-        poller = KinesisMicroBatchPoller(
-            spark, "radapt", checkpoint_dir=str(tmp_path / "ck"), **common
-        )
-        put(2048, 10)  # 2 KiB avg -> adapted limit 2 MiB / 2 KiB = 1024
-        bid, df = poller.poll()
-        assert df.count() == 10
-        poller.commit(bid)
-        assert poller._shard_limits["shardId-000000000000"] == 1024
-
-        # fresh process: new poller over the same checkpoint
-        restarted = KinesisMicroBatchPoller(
-            spark, "radapt", checkpoint_dir=str(tmp_path / "ck"), **common
-        )
-        put(2048, 5)
-        mark = len(fk.get_records_log)
-        bid2, df2 = restarted.poll()
-        assert df2.count() == 5
-        restarted.commit(bid2)
-        # the restarted poller's FIRST fetch used the persisted 1024,
-        # not the 10000 API max
-        assert fk.get_records_log[mark] == ("shardId-000000000000", 1024)
-
-
-def test_executor_parallel_restart_replays_staged_without_network(
-    spark, tmp_path
-):
-    """A fresh poller over the checkpoint of a crashed-before-commit
-    executor-parallel poll must re-deliver the staged batch with its
-    ORIGINAL membership and ZERO GetRecords calls (the staging parquet
-    IS the replay source), then resume incrementally after commit."""
-    import gzip as _gzip
-
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="prestart", ShardCount=3)
-
-        def put(tag, n):
-            client.put_records(
-                StreamName="prestart",
-                Records=[
-                    {
-                        "Data": _gzip.compress(f"{tag}-{i}".encode()),
-                        "PartitionKey": f"key-{i}",
-                    }
-                    for i in range(n)
-                ],
-            )
-
-        common = dict(
-            region="us-east-1",
-            endpoint_url=fk.endpoint_url,
-            decode="gzip",
-            interval_millis=0,
-            executor_parallel=True,
-            client_kwargs={
-                "aws_access_key_id": "test",
-                "aws_secret_access_key": "test",
-            },
-        )
-        poller = KinesisMicroBatchPoller(
-            spark, "prestart", checkpoint_dir=str(tmp_path / "ck"), **common
-        )
-        put("a", 30)
-        bid, df = poller.poll()
-        key = lambda r: (r["shard_id"], int(r["sequence_number"]), r["value"])  # noqa: E731
-        original = sorted(
-            map(key, df.select("value", "shard_id", "sequence_number").collect())
-        )
-        assert len(original) == 30
-        # crash before commit: drop the poller, records keep arriving
-        del poller
-        put("late", 7)
-
-        restarted = KinesisMicroBatchPoller(
-            spark, "prestart", checkpoint_dir=str(tmp_path / "ck"), **common
-        )
-        mark = len(fk.get_records_log)
-        rbid, rdf = restarted.poll()
-        assert rbid == bid
-        assert (
-            sorted(
-                map(
-                    key,
-                    rdf.select(
-                        "value", "shard_id", "sequence_number"
-                    ).collect(),
-                )
-            )
-            == original
-        )
-        # zero network: the staged parquet answered the replay
-        assert len(fk.get_records_log) == mark
-        restarted.commit(rbid)
-
-        bid2, df2 = restarted.poll()
-        assert bid2 == rbid + 1
-        vals = sorted(r["value"] for r in df2.collect())
-        assert vals == sorted(f"late-{i}" for i in range(7))
-        restarted.commit(bid2)
-
-
-def test_poller_mode_interop_across_checkpoint(spark, tmp_path):
-    """A deployment can switch consumption modes over ONE checkpoint
-    (dev driver-side loop upgraded to executor-parallel, or rolled
-    back): the offsets format is shared, so each mode resumes the
-    other's committed positions incrementally, and an UNCOMMITTED
-    staged batch left by a parallel poller replays correctly from a
-    driver-mode-configured poller (staged parquet is the replay source
-    regardless of the reader's own mode)."""
-    import gzip as _gzip
-
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="interop", ShardCount=2)
-
-        def put(tag, n):
-            client.put_records(
-                StreamName="interop",
-                Records=[
-                    {
-                        "Data": _gzip.compress(f"{tag}-{i}".encode()),
-                        "PartitionKey": f"key-{i}",
-                    }
-                    for i in range(n)
-                ],
-            )
-
-        ck = str(tmp_path / "ck")
-        common = dict(
-            region="us-east-1",
-            endpoint_url=fk.endpoint_url,
-            decode="gzip",
-            interval_millis=0,
-            client_kwargs={
-                "aws_access_key_id": "test",
-                "aws_secret_access_key": "test",
-            },
-        )
-
-        # driver mode polls + commits wave a
-        drv = KinesisMicroBatchPoller(
-            spark, "interop", checkpoint_dir=ck, **common
-        )
-        put("a", 12)
-        bid_a, df_a = drv.poll()
-        assert sorted(r["value"] for r in df_a.collect()) == sorted(
-            f"a-{i}" for i in range(12)
-        )
-        drv.commit(bid_a)
-
-        # parallel mode picks up from the driver-mode checkpoint: wave
-        # b only — then crashes before commit, leaving a staged batch
-        par = KinesisMicroBatchPoller(
-            spark, "interop", checkpoint_dir=ck, executor_parallel=True, **common
-        )
-        put("b", 9)
-        bid_b, df_b = par.poll()
-        assert bid_b == bid_a + 1
-        original_b = sorted(r["value"] for r in df_b.collect())
-        assert original_b == sorted(f"b-{i}" for i in range(9))
-        del par
-        put("c", 5)
-
-        # rollback to driver mode: replays the parallel poller's staged
-        # uncommitted batch byte-identically, then consumes wave c
-        back = KinesisMicroBatchPoller(
-            spark, "interop", checkpoint_dir=ck, **common
-        )
-        rbid, rdf = back.poll()
-        assert rbid == bid_b
-        assert sorted(r["value"] for r in rdf.collect()) == original_b
-        back.commit(rbid)
-        bid_c, df_c = back.poll()
-        assert sorted(r["value"] for r in df_c.collect()) == sorted(
-            f"c-{i}" for i in range(5)
-        )
-        back.commit(bid_c)
+        assert len(_consume_available_now(spark, fk, "par", out, ckpt)) == 48
 
 
 def test_executor_parallel_hot_shard_skew(spark, tmp_path):
     """Extreme shard skew (every record on ONE partition key -> one hot
     shard, three empty) must not lose, duplicate, or reorder anything:
     the hot shard is a single straggler task by design — its ceiling is
-    the per-shard API limit, not the consumer — and empty shards still
-    report ledger rows so positions advance."""
-    import gzip as _gzip
-
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
+    the per-shard API limit, not the consumer — and the empty shards'
+    tasks drain nothing."""
     from .fake_kinesis import FakeKinesis
 
     with FakeKinesis() as fk:
         client = _fake_client(fk)
         client.create_stream(StreamName="hot", ShardCount=4)
         recs = [
-            {
-                "Data": _gzip.compress(f"r-{i}".encode()),
-                "PartitionKey": "the-one-hot-key",
-            }
+            {"Data": f"r-{i}".encode(), "PartitionKey": "the-one-hot-key"}
             for i in range(1000)
         ]
         for i in range(0, len(recs), 500):
             client.put_records(StreamName="hot", Records=recs[i : i + 500])
-
-        poller = KinesisMicroBatchPoller(
-            spark,
-            "hot",
-            checkpoint_dir=str(tmp_path / "ck"),
-            region="us-east-1",
-            endpoint_url=fk.endpoint_url,
-            decode="gzip",
-            interval_millis=0,
-            executor_parallel=True,
-            client_kwargs={
-                "aws_access_key_id": "test",
-                "aws_secret_access_key": "test",
-            },
+        rows = _consume_available_now(
+            spark, fk, "hot", str(tmp_path / "out"), str(tmp_path / "ck")
         )
-        bid, df = poller.poll()
-        rows = df.select("value", "shard_id", "sequence_number").collect()
-        assert sorted(r["value"] for r in rows) == sorted(
-            f"r-{i}" for i in range(1000)
-        )
-        # all 1000 landed on one shard, in produce order
-        shards = {r["shard_id"] for r in rows}
-        assert len(shards) == 1
-        hot = [
-            (int(r["sequence_number"]), r["value"])
-            for r in df.collect()
-        ]
-        assert [v for _, v in sorted(hot)] == [f"r-{i}" for i in range(1000)]
-        poller.commit(bid)
-
-
-def test_checkpoint_gc_bounds_offsets_and_commits(spark, tmp_path):
-    """A continuous poller must not grow its checkpoint without bound:
-    commit(N) prunes offsets/commits below N (one file pair per poll
-    otherwise — ~86k/day at 1 poll/s), while replay keeps working: the
-    uncommitted latest batch and its predecessor's positions are always
-    retained."""
-    import os as _os
-
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="gc", ShardCount=1)
-        ck = str(tmp_path / "ck")
-        poller = KinesisMicroBatchPoller(
-            spark,
-            "gc",
-            checkpoint_dir=ck,
-            boto3_client=client,
-            interval_millis=0,
-        )
-        for w in range(6):
-            client.put_record(
-                StreamName="gc", Data=f"w-{w}".encode(), PartitionKey="k"
-            )
-            bid, df = poller.poll()
-            assert df.count() == 1
-            poller.commit(bid)
-        # after 6 committed polls: exactly the latest offsets file and
-        # commit marker survive
-        assert _os.listdir(_os.path.join(ck, "offsets")) == ["5.json"]
-        assert _os.listdir(_os.path.join(ck, "commits")) == ["5"]
-
-        # replay across GC'd history: batch 6 polled but uncommitted,
-        # a fresh poller re-delivers it from offsets 6 + prev 5
-        client.put_record(StreamName="gc", Data=b"w-6", PartitionKey="k")
-        bid6, df6 = poller.poll()
-        assert bid6 == 6
-        restarted = KinesisMicroBatchPoller(
-            spark,
-            "gc",
-            checkpoint_dir=ck,
-            boto3_client=client,
-            interval_millis=0,
-        )
-        rbid, rdf = restarted.poll()
-        assert rbid == 6
-        assert [r["value"] for r in rdf.collect()] == ["w-6"]
-        restarted.commit(rbid)
+    # all 1000 landed on one shard, exactly once, in produce order
+    assert len({r["shardId"] for r in rows}) == 1
+    ordered = sorted(rows, key=lambda r: int(r["sequenceNumber"]))
+    assert _payloads(ordered) == [f"r-{i}" for i in range(1000)]
 
 
 def test_kinesis_fixture_producer_cap_is_pinned():
@@ -1179,50 +670,54 @@ def test_kinesis_pysource_checkpoint_resume_exactly_once(spark, tmp_path):
         assert len(all_rows) == 17, f"duplicates or drops: {sorted(all_rows)}"
 
 
-def test_kinesis_pysource_read_between_offsets_exact_bounds(spark):
-    """Failure-replay contract: readBetweenOffsets(start, end) returns
-    exactly the records with start < sequence <= end per shard — the
-    bounds Spark hands back when a batch must be recomputed."""
+def test_kinesis_pysource_closing_batch_exact_bounds():
+    """Failure-replay contract of a closing batch: a reshard parent's
+    last batch ends at the shard's EndingSequenceNumber, and its
+    partition drains exactly the records with start < sequence <= end
+    — from any start position, and for any inclusive bound inside the
+    shard."""
     from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
+        CLOSED,
         TRIM,
-        KinesisSimpleStreamReader,
+        ShardRangePartition,
     )
 
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
+    with _virtual_fake(1_700_000_600.2) as (_clock, fk):
         client = _fake_client(fk)
-        client.create_stream(StreamName="pysrc-replay", ShardCount=1)
+        client.create_stream(StreamName="pysrc-close", ShardCount=1)
         client.put_records(
-            StreamName="pysrc-replay",
+            StreamName="pysrc-close",
             Records=[
                 {"Data": f"r{i}".encode(), "PartitionKey": "k"} for i in range(9)
             ],
         )
-        reader = KinesisSimpleStreamReader(
-            {
-                "streamname": "pysrc-replay",
-                "endpointurl": fk.endpoint_url,
-                "accesskeyid": "test",
-                "secretaccesskey": "test",
-            }
+        reader = _reader(fk, "pysrc-close")
+        (shard,) = reader.initialOffset()
+        seqs = [r[3] for r in _batch(reader, {shard: TRIM}, reader.latestOffset())]
+        assert len(seqs) == 9
+        client.split_shard(
+            StreamName="pysrc-close", ShardToSplit=shard, NewStartingHashKey="1"
         )
-        start = reader.initialOffset()
-        rows, end = reader.read(start)
-        rows = list(rows)
-        assert len(rows) == 9
-        shard = next(iter(end))
-        seqs = [r[3] for r in rows]  # sequenceNumber column
-        # full replay: TRIM -> end reproduces the batch exactly
-        replay = list(reader.readBetweenOffsets({shard: TRIM}, end))
-        assert [r[3] for r in replay] == seqs
-        # partial replay: after the 3rd record -> through the 7th
-        mid_start = {shard: seqs[2]}
-        mid_end = {shard: seqs[6]}
-        part = list(reader.readBetweenOffsets(mid_start, mid_end))
-        assert [r[3] for r in part] == seqs[3:7]
+        client.put_record(StreamName="pysrc-close", Data=b"child", PartitionKey="k")
+        ending = next(
+            s["SequenceNumberRange"]["EndingSequenceNumber"]
+            for s in client.list_shards(StreamName="pysrc-close")["Shards"]
+            if s["ShardId"] == shard
+        )
+        end = reader.latestOffset()
+        assert end[shard] == CLOSED + ending
+        # the closing batch from mid-shard: everything after the start
+        (closing,) = [
+            p for p in reader.partitions({shard: seqs[2]}, end) if p.shard_id == shard
+        ]
+        assert closing.end == ending
+        assert [r[3] for r in reader.read(closing)] == seqs[3:]
+        # an inclusive bound inside the shard: after the 3rd record,
+        # through the 7th
+        part = ShardRangePartition(shard, seqs[2], seqs[6])
+        assert [r[3] for r in reader.read(part)] == seqs[3:7]
         # empty window: start == end yields nothing
-        assert list(reader.readBetweenOffsets(mid_end, mid_end)) == []
+        assert list(reader.read(ShardRangePartition(shard, seqs[6], seqs[6]))) == []
 
 
 def test_kinesis_pysource_batch_plans_one_task_per_shard(spark):
@@ -1273,22 +768,17 @@ def test_kinesis_pysource_batch_plans_one_task_per_shard(spark):
         assert df.count() == 30
 
 
-def test_kinesis_pysource_reshard_retires_closed_parent(spark):
+def test_kinesis_pysource_reshard_retires_closed_parent():
     """Reshard lifecycle through the reader contract: after a
-    SplitShard, the next read() admits the children at TRIM_HORIZON and
-    tombstones the drained CLOSED parent (review finding: keeping a
-    closed shard's sequence in the offsets forever would wedge the
-    query once real retention ages it out — GetShardIterator throws on
-    every subsequent trigger). Records produced before and after the
-    split all arrive exactly once; the parent is never polled again."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
-        CLOSED,
-        KinesisSimpleStreamReader,
-    )
+    SplitShard, the next batch admits the children at TRIM_HORIZON and
+    tombstones the CLOSED parent with its exact end bound (review
+    finding: keeping a closed shard's position live forever would wedge
+    the query once real retention ages it out — GetShardIterator throws
+    on every subsequent trigger). Records produced before and after the
+    split all arrive exactly once; the parent is never planned again."""
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import CLOSED
 
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
+    with _virtual_fake(1_700_000_700.2) as (_clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-reshard", ShardCount=1)
         client.put_records(
@@ -1298,19 +788,11 @@ def test_kinesis_pysource_reshard_retires_closed_parent(spark):
                 for i in range(5)
             ],
         )
-        reader = KinesisSimpleStreamReader(
-            {
-                "streamname": "pysrc-reshard",
-                "endpointurl": fk.endpoint_url,
-                "accesskeyid": "test",
-                "secretaccesskey": "test",
-            }
-        )
+        reader = _reader(fk, "pysrc-reshard")
         o0 = reader.initialOffset()
-        parent = next(iter(o0))
-        rows1, o1 = reader.read(o0)
-        got1 = {bytes(r[0]).decode() for r in rows1}
-        assert got1 == {f"pre-{i}" for i in range(5)}
+        (parent,) = o0
+        o1 = reader.latestOffset()
+        assert set(_payloads(_batch(reader, o0, o1))) == {f"pre-{i}" for i in range(5)}
 
         client.split_shard(
             StreamName="pysrc-reshard",
@@ -1324,36 +806,28 @@ def test_kinesis_pysource_reshard_retires_closed_parent(spark):
                 for i in range(6)
             ],
         )
-        rows2, o2 = reader.read(o1)
-        got2 = {bytes(r[0]).decode() for r in rows2}
-        assert got2 == {f"post-{i}" for i in range(6)}
-        # the parent closed and drained: tombstoned, children tracked
+        o2 = reader.latestOffset()
+        assert set(_payloads(_batch(reader, o1, o2))) == {f"post-{i}" for i in range(6)}
+        # the parent closed: tombstoned, children tracked
         assert o2[parent].startswith(CLOSED), o2
-        children = [s for s in o2 if s != parent]
-        assert len(children) == 2
-        # a third read never touches the parent and finds nothing new
-        rows3, o3 = reader.read(o2)
-        assert list(rows3) == []
+        assert len([s for s in o2 if s != parent]) == 2
+        # a third batch never plans the parent and finds nothing new
+        o3 = reader.latestOffset()
+        assert parent not in {p.shard_id for p in reader.partitions(o2, o3)}
+        assert _batch(reader, o2, o3) == []
         assert o3[parent] == o2[parent]
 
 
-def test_kinesis_pysource_latest_anchor_skips_existing_records(spark):
+def test_kinesis_pysource_latest_anchor_skips_existing_records():
     """LATEST initial position (VERDICT r8 #2): initialOffset anchors
     every shard at AT_TIMESTAMP(query start) — the only tip anchor the
     public API can replay — so records produced BEFORE the anchor never
-    arrive, records produced after all do, and the anchored first batch
-    is exactly reproducible via readBetweenOffsets (the exactly-once
-    replay contract LATEST must keep)."""
-    import time as _time
+    arrive, records produced after all do, and the anchored batch is
+    exactly reproducible from its offsets on a fresh reader (the
+    exactly-once replay contract LATEST must keep)."""
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import AT_TS
 
-    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
-        AT_TS,
-        KinesisSimpleStreamReader,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
+    with _virtual_fake(1_700_000_800.4) as (clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-latest", ShardCount=2)
         client.put_records(
@@ -1363,28 +837,13 @@ def test_kinesis_pysource_latest_anchor_skips_existing_records(spark):
                 for i in range(8)
             ],
         )
-        _time.sleep(0.02)  # pre-anchor arrivals strictly below the anchor
-        reader = KinesisSimpleStreamReader(
-            {
-                "streamname": "pysrc-latest",
-                "endpointurl": fk.endpoint_url,
-                "accesskeyid": "test",
-                "secretaccesskey": "test",
-                "initialposition": "LATEST",
-            }
-        )
+        clock.sleep(0.02)  # pre-anchor arrivals strictly below the anchor
+        reader = _reader(fk, "pysrc-latest", initialposition="LATEST")
         o0 = reader.initialOffset()
         assert all(v.startswith(AT_TS) for v in o0.values()), o0
-        # nothing after the anchor yet: empty batch, anchors unchanged
-        rows0, o1 = reader.read(o0)
-        assert list(rows0) == []
-        assert o1 == o0
-        # the anchor is ceiled to a whole second (botocore truncates the
-        # Timestamp wire param to integer seconds) — produce the new
-        # wave strictly after it
-        anchor = max(int(v[len(AT_TS):]) for v in o0.values())
-        while _time.time() <= anchor:
-            _time.sleep(0.05)
+        # nothing after the anchor yet: an empty batch
+        o1 = reader.latestOffset()
+        assert _batch(reader, o0, o1) == []
         client.put_records(
             StreamName="pysrc-latest",
             Records=[
@@ -1392,82 +851,49 @@ def test_kinesis_pysource_latest_anchor_skips_existing_records(spark):
                 for i in range(5)
             ],
         )
-        rows1, o2 = reader.read(o1)
-        rows1 = list(rows1)
-        assert {bytes(r[0]).decode() for r in rows1} == {
-            f"new-{i}" for i in range(5)
-        }
-        # failure replay from the anchor reproduces the batch exactly
-        replay = list(reader.readBetweenOffsets(o1, o2))
-        assert sorted(r[3] for r in replay) == sorted(r[3] for r in rows1)
+        o2 = reader.latestOffset()
+        rows = _batch(reader, o1, o2)
+        assert set(_payloads(rows)) == {f"new-{i}" for i in range(5)}
+        # failure replay from the offsets reproduces the batch exactly
+        replay = _batch(_reader(fk, "pysrc-latest", initialposition="LATEST"), o1, o2)
+        assert sorted(r[3] for r in replay) == sorted(r[3] for r in rows)
 
 
-def test_kinesis_pysource_at_timestamp_initial_position(spark):
+def test_kinesis_pysource_at_timestamp_initial_position():
     """AT_TIMESTAMP initial position: the explicit form of the LATEST
     anchor — records at/after the given epoch arrive, earlier ones
     don't; a missing initialPositionTimestamp raises."""
-    import time as _time
-
-    import pytest as _pytest
-
-    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
-        KinesisSimpleStreamReader,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
+    with _virtual_fake(1_700_000_900.2) as (clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-atts", ShardCount=1)
-        client.put_record(
-            StreamName="pysrc-atts", Data=b"before", PartitionKey="k"
-        )
+        client.put_record(StreamName="pysrc-atts", Data=b"before", PartitionKey="k")
         # the Timestamp wire param carries integer seconds (botocore):
         # cut on a whole-second boundary strictly between the two puts
-        import math as _math
-
-        cut = _math.ceil(_time.time() + 0.01)
-        while _time.time() <= cut:
-            _time.sleep(0.05)
-        client.put_record(
-            StreamName="pysrc-atts", Data=b"after", PartitionKey="k"
+        cut = 1_700_000_901
+        clock.now = cut + 0.1
+        client.put_record(StreamName="pysrc-atts", Data=b"after", PartitionKey="k")
+        reader = _reader(
+            fk,
+            "pysrc-atts",
+            initialposition="AT_TIMESTAMP",
+            initialpositiontimestamp=str(cut),
         )
-        reader = KinesisSimpleStreamReader(
-            {
-                "streamname": "pysrc-atts",
-                "endpointurl": fk.endpoint_url,
-                "accesskeyid": "test",
-                "secretaccesskey": "test",
-                "initialposition": "AT_TIMESTAMP",
-                "initialpositiontimestamp": str(cut),
-            }
-        )
-        rows, _end = reader.read(reader.initialOffset())
-        assert [bytes(r[0]).decode() for r in rows] == ["after"]
-        with _pytest.raises(ValueError, match="initialPositionTimestamp"):
-            KinesisSimpleStreamReader(
-                {
-                    "streamname": "pysrc-atts",
-                    "endpointurl": fk.endpoint_url,
-                    "initialposition": "AT_TIMESTAMP",
-                }
-            ).initialOffset()
+        start = reader.initialOffset()
+        assert _payloads(_batch(reader, start, reader.latestOffset())) == ["after"]
+        with pytest.raises(ValueError, match="initialPositionTimestamp"):
+            _reader(fk, "pysrc-atts", initialposition="AT_TIMESTAMP").initialOffset()
 
 
 def test_kinesis_pysource_expired_sequence_falls_back_to_trim(caplog):
-    """ADVICE r8: a committed sequence the service no longer accepts
-    (aged past stream retention during query downtime) must not wedge
-    the query on every trigger — the reader falls back to TRIM_HORIZON
-    and logs the data-loss window (real-connector behavior)."""
+    """ADVICE r8: a committed sequence start the service no longer
+    accepts (aged past stream retention during query downtime — the
+    start positions of a checkpoint written by the earlier driver-side
+    reader are sequences) must not wedge the query on every trigger —
+    the drain falls back to TRIM_HORIZON and logs the data-loss window
+    (real-connector behavior), once."""
     import logging
 
-    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
-        KinesisSimpleStreamReader,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
+    with _virtual_fake(1_700_001_000.2) as (_clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-expired", ShardCount=1)
         client.put_records(
@@ -1476,113 +902,122 @@ def test_kinesis_pysource_expired_sequence_falls_back_to_trim(caplog):
                 {"Data": f"r{i}".encode(), "PartitionKey": "k"} for i in range(4)
             ],
         )
-        reader = KinesisSimpleStreamReader(
-            {
-                "streamname": "pysrc-expired",
-                "endpointurl": fk.endpoint_url,
-                "accesskeyid": "test",
-                "secretaccesskey": "test",
-            }
-        )
-        shard = next(iter(reader.initialOffset()))
+        reader = _reader(fk, "pysrc-expired")
+        (shard,) = reader.initialOffset()
+        end = reader.latestOffset()
         # a sequence the service never issued -> InvalidArgumentException
         # from GetShardIterator (the same error an expired one raises)
         with caplog.at_level(
             logging.WARNING,
             logger="kda_flink_app_timestream_spark.streaming.kinesis_pysource",
         ):
-            rows, end = reader.read({shard: "999999"})
-        rows = list(rows)
-        assert {bytes(r[0]).decode() for r in rows} == {f"r{i}" for i in range(4)}
+            rows = _batch(reader, {shard: "999999"}, end)
+        assert set(_payloads(rows)) == {f"r{i}" for i in range(4)}
         assert any("TRIM_HORIZON" in r.message for r in caplog.records)
-        # recovery is once, not per-trigger: the next read continues
-        # from the re-established concrete sequence with no new warning
+        # recovery is once, not per-trigger: the next batch starts from
+        # the committed boundary with no new warning
         caplog.clear()
-        rows2, _ = reader.read(end)
-        assert list(rows2) == []
+        assert _batch(reader, end, reader.latestOffset()) == []
         assert not caplog.records
 
 
-def test_kinesis_pysource_child_deferred_while_parent_undrained():
-    """ADVICE r8 (parent-before-child admission): with maxPagesPerBatch
-    capping a batch, a post-reshard child must NOT be admitted while
-    its closed parent still has undrained records — otherwise a key's
-    child-shard records could land in an earlier batch than the
-    parent's remainder. The child stays at TRIM until the parent
-    tombstones CLOSED, then drains; every record arrives exactly once
-    and parent records all precede child records in batch order."""
+def test_kinesis_pysource_resumes_sequence_checkpoint():
+    """A checkpoint written by the earlier driver-side reader resumes
+    exactly once: its committed start positions are concrete last-read
+    sequence numbers and ``<CLOSED>:`` tombstones (with the closing
+    sequence, or bare for a shard closed before anything was read).
+    Each sequence start drains exactly the records after it and before
+    the new batch's boundary; tombstoned shards plan nothing."""
+    import hashlib
+
     from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
         CLOSED,
-        TRIM,
-        KinesisSimpleStreamReader,
+        KinesisBatchReader,
     )
 
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
+    with _virtual_fake(1_700_001_100.2) as (_clock, fk):
         client = _fake_client(fk)
-        client.create_stream(StreamName="pysrc-defer", ShardCount=1)
-        client.put_records(
-            StreamName="pysrc-defer",
-            Records=[
-                {"Data": f"pre-{i}".encode(), "PartitionKey": str(i)}
-                for i in range(6)
-            ],
+        client.create_stream(StreamName="legacy", ShardCount=3)
+        s0, s1, s2 = (
+            s["ShardId"] for s in client.list_shards(StreamName="legacy")["Shards"]
         )
-        reader = KinesisSimpleStreamReader(
+        ranges = {
+            s["ShardId"]: (
+                int(s["HashKeyRange"]["StartingHashKey"]),
+                int(s["HashKeyRange"]["EndingHashKey"]),
+            )
+            for s in client.list_shards(StreamName="legacy")["Shards"]
+        }
+
+        def shard_of(key):
+            h = int.from_bytes(hashlib.md5(key.encode()).digest(), "big")
+            return next(sid for sid, (lo, hi) in ranges.items() if lo <= h <= hi)
+
+        def put(tag, keys):
+            client.put_records(
+                StreamName="legacy",
+                Records=[
+                    {"Data": f"{tag}-{k}".encode(), "PartitionKey": k} for k in keys
+                ],
+            )
+
+        # wave a skips s2, so s2 closes without a record ever read: the
+        # old reader's bare tombstone
+        put("a", [k for k in (f"k{i}" for i in range(60)) if shard_of(k) != s2][:24])
+        client.merge_shards(StreamName="legacy", ShardToMerge=s1, AdjacentShardToMerge=s2)
+        put("b", [f"b{i}" for i in range(12)])
+
+        snap = KinesisBatchReader(
             {
-                "streamname": "pysrc-defer",
-                "endpointurl": fk.endpoint_url,
-                "accesskeyid": "test",
-                "secretaccesskey": "test",
-                "maxfetchrecordspershard": "2",  # 3 pages of parent backlog
-                "maxpagesperbatch": "1",  # page-capped triggers
+                "streamName": "legacy",
+                "endpointUrl": fk.endpoint_url,
+                "accessKeyId": "t",
+                "secretAccessKey": "t",
             }
         )
-        o0 = reader.initialOffset()
-        parent = next(iter(o0))
-        client.split_shard(
-            StreamName="pysrc-defer",
-            ShardToSplit=parent,
-            NewStartingHashKey=str(2**127),
+        by_shard: dict[str, list] = {}
+        for p in snap.partitions():
+            by_shard[p.shard_id] = [(r[3], bytes(r[0]).decode()) for r in snap.read(p)]
+        (merged,) = set(by_shard) - {s0, s1, s2}
+        assert len(by_shard[s0]) >= 3 and by_shard[s1] and not by_shard[s2]
+        assert len(by_shard[merged]) >= 2
+        legacy_start = {
+            s0: by_shard[s0][2][0],  # read through its 3rd record
+            s1: CLOSED + by_shard[s1][-1][0],  # drained, then closed
+            s2: CLOSED,  # closed before anything was read
+            merged: by_shard[merged][0][0],  # read through its 1st record
+        }
+
+        reader = _reader(fk, "legacy")
+        end = reader.latestOffset()
+        put("c", [f"c{i}" for i in range(12)])  # after the boundary
+        parts = reader.partitions(legacy_start, end)
+        assert sorted(p.shard_id for p in parts) == sorted([s0, merged])
+        rows = [r for p in parts for r in reader.read(p)]
+        assert sorted((r[3], bytes(r[0]).decode()) for r in rows) == sorted(
+            by_shard[s0][3:] + by_shard[merged][1:]
         )
-        client.put_records(
-            StreamName="pysrc-defer",
-            Records=[
-                {"Data": f"post-{i}".encode(), "PartitionKey": str(i)}
-                for i in range(3)
-            ],
-        )
-        # drive page-capped batches to a fixpoint, recording arrival order
-        arrivals: list[str] = []
-        offsets = o0
-        for _ in range(12):
-            rows, offsets = reader.read(offsets)
-            batch = [bytes(r[0]).decode() for r in rows]
-            arrivals.extend(batch)
-            children = [s for s in offsets if s != parent]
-            if not offsets[parent].startswith(CLOSED):
-                # parent undrained: children exist but stay unadmitted
-                assert all(offsets[c] == TRIM for c in children), offsets
-                assert not any(b.startswith("post-") for b in batch), batch
-            if len(arrivals) == 9 and offsets[parent].startswith(CLOSED):
-                break
-        assert sorted(arrivals) == sorted(
-            [f"pre-{i}" for i in range(6)] + [f"post-{i}" for i in range(3)]
-        )
-        # ordering: every parent record precedes every child record
-        last_pre = max(i for i, b in enumerate(arrivals) if b.startswith("pre-"))
-        first_post = min(
-            i for i, b in enumerate(arrivals) if b.startswith("post-")
-        )
-        assert last_pre < first_post, arrivals
+
+
+def test_kinesis_pysource_stream_reader_is_always_partitioned():
+    """One streaming reader: ``streamReader`` returns the partitioned
+    reader whatever the options, and a leftover ``reader`` option is
+    accepted and ignored."""
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
+        KinesisPartitionedStreamReader,
+        KinesisPythonDataSource,
+    )
+
+    for extra in ({}, {"reader": "partitioned"}, {"reader": "simple"}):
+        source = KinesisPythonDataSource({"streamName": "s", **extra})
+        assert type(source.streamReader(None)) is KinesisPartitionedStreamReader
 
 
 def test_kinesis_pysource_partitioned_one_task_per_shard(spark, tmp_path):
-    """VERDICT r8 #3: the full DataSourceStreamReader path
-    (``option("reader", "partitioned")``) plans one Spark task per
-    shard PER MICRO-BATCH — spark_partition_id maps 1:1 to shardId in
-    the sink output — and checkpoint resume stays exactly-once."""
+    """VERDICT r8 #3: the full DataSourceStreamReader path plans one
+    Spark task per shard PER MICRO-BATCH — spark_partition_id maps 1:1
+    to shardId in the sink output — and checkpoint resume stays
+    exactly-once."""
     from pyspark.sql import functions as SF
 
     from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
@@ -1602,7 +1037,6 @@ def test_kinesis_pysource_partitioned_one_task_per_shard(spark, tmp_path):
             .option("endpointUrl", fk.endpoint_url)
             .option("accessKeyId", "test")
             .option("secretAccessKey", "test")
-            .option("reader", "partitioned")
             .load()
         )
         q = (
@@ -1740,15 +1174,9 @@ def test_kinesis_pysource_partitioned_batch_span_cap():
     capped boundary is already in the past), batches drain in bounded
     slices, and the union is still exactly-once. Driven under a virtual
     clock so the whole-second boundary wait is instant."""
-    from unittest import mock
-
-    from kda_flink_app_timestream_spark.streaming import kinesis_fake
     from kda_flink_app_timestream_spark.streaming import kinesis_pysource as kps
 
-    clock = _VClock(1_700_000_000.3)
-    with mock.patch.object(kinesis_fake, "time", clock), mock.patch.object(
-        kps, "time", clock
-    ), kinesis_fake.FakeKinesis() as fk:
+    with _virtual_fake(1_700_000_000.3) as (clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-span", ShardCount=1)
         backlog_start = int(clock.now)
@@ -1806,17 +1234,11 @@ def test_kinesis_pysource_partitioned_clock_step_back_holds_boundary():
     in-process clamp can't see the checkpoint — fails partition
     planning loudly instead of silently committing a batch that would
     re-emit records."""
-    from unittest import mock
-
     import pytest as _pytest
 
-    from kda_flink_app_timestream_spark.streaming import kinesis_fake
     from kda_flink_app_timestream_spark.streaming import kinesis_pysource as kps
 
-    clock = _VClock(1_700_000_000.2)
-    with mock.patch.object(kinesis_fake, "time", clock), mock.patch.object(
-        kps, "time", clock
-    ), kinesis_fake.FakeKinesis() as fk:
+    with _virtual_fake(1_700_000_000.2) as (clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-ntp", ShardCount=1)
         reader = kps.KinesisPartitionedStreamReader(
@@ -1866,15 +1288,9 @@ def test_kinesis_pysource_partitioned_boundary_lag():
     latestOffset only returns once the boundary is L seconds in the
     past — so a record stamped just before the boundary by a service
     clock up to L behind is already ingested when executors drain."""
-    from unittest import mock
-
-    from kda_flink_app_timestream_spark.streaming import kinesis_fake
     from kda_flink_app_timestream_spark.streaming import kinesis_pysource as kps
 
-    clock = _VClock(1_700_000_100.4)
-    with mock.patch.object(kinesis_fake, "time", clock), mock.patch.object(
-        kps, "time", clock
-    ), kinesis_fake.FakeKinesis() as fk:
+    with _virtual_fake(1_700_000_100.4) as (clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-lag", ShardCount=1)
         # records spread across the last 8 virtual seconds
@@ -1919,15 +1335,9 @@ def test_kinesis_pysource_partitioned_future_anchor_holds_not_blocks():
     once the clock passes it. Fractional anchors seed the floor CEILed,
     so the boundary never precedes the committed anchor on a healthy
     clock."""
-    from unittest import mock
-
-    from kda_flink_app_timestream_spark.streaming import kinesis_fake
     from kda_flink_app_timestream_spark.streaming import kinesis_pysource as kps
 
-    clock = _VClock(1_700_000_200.4)
-    with mock.patch.object(kinesis_fake, "time", clock), mock.patch.object(
-        kps, "time", clock
-    ), kinesis_fake.FakeKinesis() as fk:
+    with _virtual_fake(1_700_000_200.4) as (clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-future", ShardCount=1)
         client.put_record(
@@ -2069,7 +1479,6 @@ def test_kinesis_pysource_partitioned_latest_restart_covers_downtime(
             .option("endpointUrl", fk.endpoint_url)
             .option("accessKeyId", "test")
             .option("secretAccessKey", "test")
-            .option("reader", "partitioned")
             .option("initialPosition", "LATEST")
             .load()
             .writeStream.format("parquet")
@@ -2147,15 +1556,9 @@ def test_kinesis_pysource_partitioned_same_second_shutdown_keeps_downtime():
     far-future anchors (exclusion is anchor semantics) and backwards
     clock steps (boundary already elapsed once) still return
     immediately — pinned by the future-anchor and ntp-backstep tests."""
-    from unittest import mock
-
-    from kda_flink_app_timestream_spark.streaming import kinesis_fake
     from kda_flink_app_timestream_spark.streaming import kinesis_pysource as kps
 
-    clock = _VClock(1_700_000_400.30)
-    with mock.patch.object(kinesis_fake, "time", clock), mock.patch.object(
-        kps, "time", clock
-    ), kinesis_fake.FakeKinesis() as fk:
+    with _virtual_fake(1_700_000_400.30) as (clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-sq", ShardCount=2)
         # wave A before the query starts: LATEST must exclude it
@@ -2265,7 +1668,6 @@ def test_kinesis_pysource_partitioned_multi_trigger_advance(spark, tmp_path):
             .option("endpointUrl", fk.endpoint_url)
             .option("accessKeyId", "test")
             .option("secretAccessKey", "test")
-            .option("reader", "partitioned")
             .load()
             .withColumn("pid", SF.spark_partition_id())
             .writeStream.format("parquet")

@@ -313,160 +313,6 @@ def test_overlap_scorers_match_naive(spark, docs):
     assert got_cont == {k: v[1] for k, v in expected.items()}
 
 
-# --- Kinesis shard admission (parent-before-child fixpoint) -------------
-
-
-@st.composite
-def _reshard_forest(draw):
-    """A random SplitShard/MergeShards lineage forest plus a random
-    ListShards discovery order, with some CLOSED parents optionally
-    dropped from discovery (expired past the retention window)."""
-    n_roots = draw(st.integers(1, 4))
-    shards = [{"ShardId": f"s{i:03d}"} for i in range(n_roots)]
-    open_ids = [s["ShardId"] for s in shards]
-    closed_ids: list[str] = []
-    next_id = n_roots
-    for _ in range(draw(st.integers(0, 5))):
-        if not open_ids:
-            break
-        do_merge = len(open_ids) >= 2 and draw(st.booleans())
-        if do_merge:
-            pair = draw(
-                st.lists(
-                    st.sampled_from(sorted(open_ids)),
-                    min_size=2,
-                    max_size=2,
-                    unique=True,
-                )
-            )
-            for p in pair:
-                open_ids.remove(p)
-                closed_ids.append(p)
-            child = {
-                "ShardId": f"s{next_id:03d}",
-                "ParentShardId": pair[0],
-                "AdjacentParentShardId": pair[1],
-            }
-            shards.append(child)
-            open_ids.append(child["ShardId"])
-            next_id += 1
-        else:
-            p = draw(st.sampled_from(sorted(open_ids)))
-            open_ids.remove(p)
-            closed_ids.append(p)
-            for _ in range(2):
-                child = {"ShardId": f"s{next_id:03d}", "ParentShardId": p}
-                shards.append(child)
-                open_ids.append(child["ShardId"])
-                next_id += 1
-    # expire a random subset of CLOSED shards out of the discovery list
-    # (an absent parent must never block its child)
-    expired = {
-        cid for cid in closed_ids if draw(st.booleans()) and draw(st.booleans())
-    }
-    visible = [s for s in shards if s["ShardId"] not in expired]
-    return draw(st.permutations(visible))
-
-
-@settings(max_examples=60, deadline=None)
-@given(discovered=_reshard_forest())
-def test_admit_shards_parent_before_child_fixpoint(discovered):
-    """ADVICE r5 #3's fix, property-tested: under ANY ListShards order
-    and ANY subset of expired ancestors, _admit_shards never admits a
-    child while a DISCOVERED parent is untracked or still draining, a
-    parent absent from discovery never blocks its child, and repeated
-    polls (each fully draining what they admitted) admit every shard
-    within one generation per poll."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    discovered = list(discovered)
-    by_id = {s["ShardId"]: s for s in discovered}
-    discovered_ids = set(by_id)
-    positions: dict[str, dict] = {}
-    rounds = 0
-    while len(positions) < len(discovered):
-        before = set(positions)
-        KinesisMicroBatchPoller._admit_shards(positions, discovered)
-        new = set(positions) - before
-        for sid in new:
-            sh = by_id[sid]
-            for p in (sh.get("ParentShardId"), sh.get("AdjacentParentShardId")):
-                if p is not None and p in discovered_ids:
-                    assert p in positions and positions[p]["retired"], (
-                        f"{sid} admitted before discovered parent {p} retired "
-                        f"(order: {[s['ShardId'] for s in discovered]})"
-                    )
-        # every poll must make progress until the forest is admitted
-        assert new, (
-            f"admission stalled at {sorted(positions)} of "
-            f"{sorted(discovered_ids)}"
-        )
-        # simulate the poll fully draining + retiring what it tracks
-        for sid in positions:
-            positions[sid]["retired"] = True
-        rounds += 1
-        assert rounds <= len(discovered) + 1
-    assert set(positions) == discovered_ids
-
-
-# --- Adaptive GetRecords limit sizing (pure function) -------------------
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    avg_size=st.integers(1, 1 << 20),
-    n_records=st.integers(1, 10_000),
-    interval_millis=st.integers(0, 10_000),
-    current=st.integers(1, 10_000),
-)
-def test_adapt_limit_respects_throughput_ceiling(
-    avg_size, n_records, interval_millis, current
-):
-    """The adapted Limit (a) stays in [1, SHARD_GETRECORDS_MAX], (b)
-    never requests more bytes per interval than the 2 MiB/s/shard
-    ceiling allows — except the API-minimum 1 record when a single
-    record is itself above the per-interval budget — (c) is a one-step
-    fixpoint under constant record size, and (d) with NO poll interval
-    (unpaced dev/test draining) keeps the current limit instead of
-    collapsing to 1 RPC per record."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KINESIS_SHARD_BYTES_PER_SEC_LIMIT,
-        SHARD_GETRECORDS_MAX,
-        _adapt_limit,
-    )
-
-    batch_bytes = avg_size * n_records
-    nxt = _adapt_limit(batch_bytes, n_records, interval_millis, current)
-    if interval_millis == 0:
-        assert nxt == current
-        return
-    assert 1 <= nxt <= SHARD_GETRECORDS_MAX
-    budget = KINESIS_SHARD_BYTES_PER_SEC_LIMIT * (interval_millis / 1000.0)
-    if nxt > 1:
-        assert nxt * avg_size <= budget
-    # one-step convergence: a batch OF the adapted size at the same avg
-    # record size re-adapts to the same limit
-    again = _adapt_limit(avg_size * nxt, nxt, interval_millis, nxt)
-    assert again == nxt
-
-
-@settings(max_examples=50, deadline=None)
-@given(
-    current=st.integers(1, 10_000),
-    n_records=st.integers(0, 5),
-    batch_bytes=st.integers(0, 100),
-)
-def test_adapt_limit_empty_batch_keeps_current(current, n_records, batch_bytes):
-    """No size signal (empty batch either way) -> carry current."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import _adapt_limit
-
-    if n_records > 0 and batch_bytes > 0:
-        return
-    assert _adapt_limit(batch_bytes, n_records, 1000, current) == current
-
-
 @settings(max_examples=15, deadline=None)
 @given(
     docs=st.lists(st.integers(1, 4000), min_size=1, max_size=40),
@@ -608,11 +454,48 @@ def test_vacuum_partitions_removes_exactly_below_cutoff(tmp_path_factory, days, 
     assert (base / "_LAYOUT_DONE").exists()
 
 
+def _reshard(client, stream: str, op: str) -> None:
+    """Apply one random-schedule reshard op: ``split`` halves the first
+    open shard with a splittable range, ``merge`` joins the first
+    adjacent pair of open shards. No candidate = no-op."""
+    shards = [
+        s
+        for s in client.list_shards(StreamName=stream)["Shards"]
+        if "EndingSequenceNumber" not in s["SequenceNumberRange"]
+    ]
+
+    def rng(s):
+        return tuple(
+            int(s["HashKeyRange"][k]) for k in ("StartingHashKey", "EndingHashKey")
+        )
+
+    if op == "split":
+        for s in shards:
+            lo, hi = rng(s)
+            if hi > lo:
+                client.split_shard(
+                    StreamName=stream,
+                    ShardToSplit=s["ShardId"],
+                    NewStartingHashKey=str((lo + hi) // 2 + 1),
+                )
+                return
+    elif op == "merge":
+        for a in shards:
+            for b in shards:
+                if rng(a)[1] + 1 == rng(b)[0]:
+                    client.merge_shards(
+                        StreamName=stream,
+                        ShardToMerge=a["ShardId"],
+                        AdjacentShardToMerge=b["ShardId"],
+                    )
+                    return
+
+
 @st.composite
 def _pysource_op_sequence(draw):
-    """A random interleaving of produces, reads, and reshard events,
-    plus a per-example page-cap setting — the adversarial schedule the
-    kinesis_py reader contract must survive."""
+    """A random interleaving of produces, reads, and reshard events —
+    the adversarial schedule the kinesis_py reader contract must
+    survive."""
     ops = draw(
         st.lists(
             st.sampled_from(["put", "put", "put", "read", "split", "merge"]),
@@ -627,8 +510,7 @@ def _pysource_op_sequence(draw):
             max_size=len(ops),
         )
     )
-    max_pages = draw(st.sampled_from([0, 1, 2]))
-    return ops, keys, max_pages
+    return ops, keys
 
 
 @settings(max_examples=10, deadline=None)
@@ -636,27 +518,29 @@ def _pysource_op_sequence(draw):
 def test_pysource_random_reshard_schedule_exactly_once(scenario):
     """End-to-end property for the registered kinesis_py reader
     (streaming/kinesis_pysource.py) under ANY interleaving of puts,
-    page-capped micro-batch reads, splits, and merges:
+    multi-page micro-batch reads, splits, and merges, from TRIM_HORIZON:
 
     1. every produced record is received exactly once at fixpoint;
-    2. records sharing a partition key arrive in production order
-       (Kinesis's per-key guarantee — survives the key's shard closing
-       mid-stream only because children defer until the parent
-       tombstones CLOSED);
+    2. a key's records never arrive in an earlier batch than a record
+       of that key produced before them — so a parent shard's records
+       never land in a later batch than its children's (the closing
+       batch drains the whole parent remainder);
     3. every batch is exactly reproducible from its offset bounds via
-       readBetweenOffsets — Spark's failure-replay contract, covering
-       TRIM anchors, concrete sequences, and CLOSED tombstones alike.
+       partitions() + read() — Spark's failure-replay contract,
+       covering TRIM anchors, AT_TS boundaries, and CLOSED tombstones.
     """
+    from unittest import mock
+
     import boto3
 
-    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
-        KinesisSimpleStreamReader,
-    )
+    from kda_flink_app_timestream_spark.streaming import kinesis_fake
+    from kda_flink_app_timestream_spark.streaming import kinesis_pysource as kps
 
-    from .fake_kinesis import FakeKinesis
-
-    ops, keys, max_pages = scenario
-    with FakeKinesis() as fk:
+    ops, keys = scenario
+    clock = _VirtualClock(start=1_700_000_000.5)
+    with mock.patch.object(kinesis_fake, "time", clock), mock.patch.object(
+        kps, "time", clock
+    ), kinesis_fake.FakeKinesis() as fk:
         client = boto3.client(
             "kinesis",
             endpoint_url=fk.endpoint_url,
@@ -665,23 +549,15 @@ def test_pysource_random_reshard_schedule_exactly_once(scenario):
             aws_secret_access_key="t",
         )
         client.create_stream(StreamName="prop", ShardCount=2)
-        reader = KinesisSimpleStreamReader(
+        reader = kps.KinesisPartitionedStreamReader(
             {
                 "streamname": "prop",
                 "endpointurl": fk.endpoint_url,
                 "accesskeyid": "t",
                 "secretaccesskey": "t",
-                "maxfetchrecordspershard": "2",
-                "maxpagesperbatch": str(max_pages),
+                "maxfetchrecordspershard": "2",  # force multi-page drains
             }
         )
-
-        def open_shards():
-            return [
-                s
-                for s in client.list_shards(StreamName="prop")["Shards"]
-                if "EndingSequenceNumber" not in s["SequenceNumberRange"]
-            ]
 
         produced: list[tuple[str, str]] = []  # (key, payload) in order
         offsets = reader.initialOffset()
@@ -689,8 +565,8 @@ def test_pysource_random_reshard_schedule_exactly_once(scenario):
 
         def one_read():
             nonlocal offsets
-            rows, end = reader.read(offsets)
-            rows = list(rows)
+            end = reader.latestOffset()
+            rows = [r for p in reader.partitions(offsets, end) for r in reader.read(p)]
             batches.append((offsets, rows, end))
             offsets = end
             return rows
@@ -704,48 +580,15 @@ def test_pysource_random_reshard_schedule_exactly_once(scenario):
                 produced.append((key, payload))
             elif op == "read":
                 one_read()
-            elif op == "split":
-                cands = [
-                    s
-                    for s in open_shards()
-                    if int(s["HashKeyRange"]["EndingHashKey"])
-                    > int(s["HashKeyRange"]["StartingHashKey"])
-                ]
-                if cands:
-                    s = cands[0]
-                    lo = int(s["HashKeyRange"]["StartingHashKey"])
-                    hi = int(s["HashKeyRange"]["EndingHashKey"])
-                    client.split_shard(
-                        StreamName="prop",
-                        ShardToSplit=s["ShardId"],
-                        NewStartingHashKey=str((lo + hi) // 2 + 1),
-                    )
-            elif op == "merge":
-                shards = open_shards()
-                pair = None
-                for a in shards:
-                    for b in shards:
-                        if (
-                            int(a["HashKeyRange"]["EndingHashKey"]) + 1
-                            == int(b["HashKeyRange"]["StartingHashKey"])
-                        ):
-                            pair = (a, b)
-                            break
-                    if pair:
-                        break
-                if pair:
-                    client.merge_shards(
-                        StreamName="prop",
-                        ShardToMerge=pair[0]["ShardId"],
-                        AdjacentShardToMerge=pair[1]["ShardId"],
-                    )
-        # drain to fixpoint: page caps + child deferral mean progress can
-        # need several reads per remaining record
-        for _ in range(60):
-            if not one_read() and batches[-1][0] == batches[-1][2]:
+            else:
+                _reshard(client, "prop", op)
+        # drain to fixpoint: one read past the last put covers every
+        # open and closed shard; the next one must be empty
+        for _ in range(5):
+            if not one_read():
                 break
         else:
-            raise AssertionError("no fixpoint after 60 drain reads")
+            raise AssertionError("no empty batch after 5 drain reads")
 
         received = [
             (r[2], bytes(r[0]).decode())  # (partitionKey, payload)
@@ -754,15 +597,21 @@ def test_pysource_random_reshard_schedule_exactly_once(scenario):
         ]
         # 1. exactly once
         assert sorted(received) == sorted(produced), (received, produced)
-        # 2. per-key production order preserved across reshards
-        for key in {k for k, _ in produced}:
-            assert [p for k, p in received if k == key] == [
-                p for k, p in produced if k == key
-            ], (key, received)
+        # 2. per-key batch monotonicity across reshards
+        batch_of = {
+            bytes(r[0]).decode(): bi
+            for bi, (_s, rows, _e) in enumerate(batches)
+            for r in rows
+        }
+        for k in {key for key, _p in produced}:
+            seq = [batch_of[p] for key, p in produced if key == k]
+            assert seq == sorted(seq), (k, seq, batches)
         # 3. every batch replays exactly from its offset bounds
         for start, rows, end in batches:
             replay = sorted(
-                (r[4], r[3]) for r in reader.readBetweenOffsets(start, end)
+                (r[4], r[3])
+                for p in reader.partitions(start, end)
+                for r in reader.read(p)
             )
             assert replay == sorted((r[4], r[3]) for r in rows), (start, end)
 
@@ -952,13 +801,6 @@ def test_pysource_partitioned_random_reshard_schedule_exactly_once(scenario):
         anchor = int(clock.now) + 1 if initial == "LATEST" else None
         reader = fresh_reader()
 
-        def open_shards():
-            return [
-                s
-                for s in client.list_shards(StreamName="pprop")["Shards"]
-                if "EndingSequenceNumber" not in s["SequenceNumberRange"]
-            ]
-
         produced: list[tuple[str, str, float]] = []  # (key, payload, stamp)
         offsets = reader.initialOffset()
         batches: list[tuple[dict, list, dict]] = []  # (start, rows, end)
@@ -990,41 +832,8 @@ def test_pysource_partitioned_random_reshard_schedule_exactly_once(scenario):
                 # stateless-restart contract: a fresh reader resumes
                 # purely from the checkpointed offsets
                 reader = fresh_reader()
-            elif op == "split":
-                cands = [
-                    s
-                    for s in open_shards()
-                    if int(s["HashKeyRange"]["EndingHashKey"])
-                    > int(s["HashKeyRange"]["StartingHashKey"])
-                ]
-                if cands:
-                    s = cands[0]
-                    lo = int(s["HashKeyRange"]["StartingHashKey"])
-                    hi = int(s["HashKeyRange"]["EndingHashKey"])
-                    client.split_shard(
-                        StreamName="pprop",
-                        ShardToSplit=s["ShardId"],
-                        NewStartingHashKey=str((lo + hi) // 2 + 1),
-                    )
-            elif op == "merge":
-                shards = open_shards()
-                pair = None
-                for a in shards:
-                    for b in shards:
-                        if (
-                            int(a["HashKeyRange"]["EndingHashKey"]) + 1
-                            == int(b["HashKeyRange"]["StartingHashKey"])
-                        ):
-                            pair = (a, b)
-                            break
-                    if pair:
-                        break
-                if pair:
-                    client.merge_shards(
-                        StreamName="pprop",
-                        ShardToMerge=pair[0]["ShardId"],
-                        AdjacentShardToMerge=pair[1]["ShardId"],
-                    )
+            else:
+                _reshard(client, "pprop", op)
         # drain to fixpoint: the boundary advances every read (the wait
         # pushes the virtual clock across each whole second)
         for _ in range(10):
