@@ -9,7 +9,6 @@ measures the distributed plan, not result transfer).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -185,136 +184,8 @@ BENCH_QUERIES = [
     "dedup_collapse_then_semantic",
 ]
 
-# canary steady-state spread at/above which the three timed passes are
-# treated as contended and ONE extra pass re-runs before reporting
-# (tightened 2.0 → 1.5 in r13 per VERDICT r12 #6: an idle box reads
-# ~1.0-1.2 steady, so 1.5 is real contention, not warmup — warmup lives
-# in sample 0 only and is excluded from steady_drift by design)
-CANARY_RETRY_THRESHOLD = 1.5
-
-
-# cross-RUN ambient-inflation threshold (VERDICT r13 #5): the in-run
-# canary is blind to whole-run ambient slowness — five same-code sf0.1
-# runs spread 143-169 s while every steady_drift read clean (r12, r13).
-# The canary's ABSOLUTE seconds are comparable across runs (fixed-cost
-# pure-JVM probe), so each run also compares its steady floor to the
-# committed prior round's artifact: a clean steady tail that is still
-# >= 1.5x the prior round's floor means the whole RUN sat on a slow
-# host window, and the headline band should be read as an upper bound.
-AMBIENT_VS_PRIOR_THRESHOLD = 1.5
-
-
-def canary_vs_prior(
-    steady_samples: list[float],
-    prior: dict | None,
-    threshold: float = AMBIENT_VS_PRIOR_THRESHOLD,
-) -> dict:
-    """Compare this run's steady canary floor to the committed prior
-    round's (``prior`` = that artifact's ``canary`` dict). min() on
-    both sides: the floor is the host's best case, immune to the
-    single-sample jitter the in-run drift rule already handles."""
-    if not steady_samples:
-        return {"verdict": "n/a", "reason": "no steady samples"}
-    floor = round(min(steady_samples), 3)
-    prior_steady = (prior or {}).get("samples", [])[1:]
-    if not prior_steady:
-        return {"verdict": "n/a", "steady_min": floor, "reason": "no prior artifact"}
-    prior_floor = round(min(prior_steady), 3)
-    inflation = round(floor / max(prior_floor, 1e-9), 2)
-    return {
-        "steady_min": floor,
-        "prior_steady_min": prior_floor,
-        "prior_round": (prior or {}).get("_round"),
-        "inflation": inflation,
-        "threshold": threshold,
-        "verdict": "ambient_slow" if inflation >= threshold else "comparable",
-    }
-
-
-def load_prior_canary(here: str, current_round: int, suffix: str) -> dict | None:
-    """The newest committed ``BENCH_LOCAL_r{N}{suffix}.json`` with
-    N < current_round that carries canary samples, its round number
-    attached as ``_round``. Same-suffix only — sf0.01 floors are not
-    comparable to sf0.1 floors (different JVM/session pressure)."""
-    best: tuple[int, dict] | None = None
-    for path in glob.glob(os.path.join(here, f"BENCH_LOCAL_r*{suffix}.json")):
-        m = re.search(r"BENCH_LOCAL_r(\d+)(.*)\.json$", os.path.basename(path))
-        if not m or m.group(2) != suffix:
-            continue
-        rnd = int(m.group(1))
-        if rnd >= current_round:
-            continue
-        try:
-            with open(path) as f:
-                canary = json.load(f).get("canary") or {}
-        except (OSError, json.JSONDecodeError):
-            continue
-        if len(canary.get("samples", [])) < 2:
-            continue
-        if best is None or rnd > best[0]:
-            best = (rnd, canary)
-    if best is None:
-        return None
-    return {**best[1], "_round": best[0]}
-
-
-def needs_canary_retry(samples: list[float], threshold: float = CANARY_RETRY_THRESHOLD) -> bool:
-    """VERDICT r8 #6: decide from the canary samples whether the timed
-    passes ran contended. Sample 0 is taken before pass 1 and can still
-    carry C2-JIT warmup, so the rule reads the STEADY tail (samples
-    1..n — after each pass): max/min >= threshold means some pass saw a
-    host-contention window large enough to pollute even min-of-3, and
-    one retry pass is warranted. One retry only — a box that stays
-    contended is reported as such (the drift stays in the artifact)."""
-    steady = samples[1:]
-    if len(steady) < 2:
-        return False
-    return max(steady) / max(min(steady), 1e-9) >= threshold
-
-
-def _current_round() -> int:
-    """Round number for the committed bench artifact: __spark_entry__'s
-    hand-maintained ``_CURRENT_ROUND`` (the single source of truth —
-    inference from committed CORRECTNESS files undercounts when a
-    driver round is skipped, as r6 was), overridable via
-    SPARK_GRAFT_ROUND; file-count inference only as a last resort."""
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    try:
-        import __spark_entry__
-
-        return int(__spark_entry__._CURRENT_ROUND)
-    except Exception:
-        import glob
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-            if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-        ]
-        return (max(rounds) + 1) if rounds else 1
-
-
-def _canary(spark) -> float:
-    """Fixed constant-cost probe (VERDICT r7 #3): a pure-JVM range
-    aggregation whose cost is independent of sf and of every catalog
-    query. Sampled at bench start / after each pass / end; if the
-    samples disagree the RUN was contended, and `canary_drift`
-    (max/min) says so in the artifact itself — no judge re-run needed
-    to diagnose noise. Each sample is min-of-3 (like the headline
-    timings): the probe is ~0.3 s, so single shots carry ~2× task-
-    scheduling jitter even on an idle box — min filters that, while
-    real host contention inflates even the min."""
-    samples = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, 2_000_000_000, 1, 32).selectExpr(
-            "sum(id * 3 % 7) AS s"
-        ).write.format("noop").mode("overwrite").save()
-        samples.append(time.perf_counter() - t0)
-    return round(min(samples), 3)
+# headline timings are the min over this many passes
+PASSES = 3
 
 
 def main() -> None:
@@ -362,11 +233,8 @@ def main() -> None:
     # the thing this benchmark exists to measure — and min-of-3
     # (VERDICT r5 #7) stops one contended pass from setting a band the
     # way min-of-2 occasionally let it.
-    _canary(spark)  # untimed first-touch: codegen/plan warmup is not drift
-    canary_samples = [_canary(spark)]
     timings: dict[str, float] = {}
-
-    def _timed_pass() -> None:
+    for _pass in range(PASSES):
         for name in BENCH_QUERIES:
             q = registry.get(name)
             if q is None:
@@ -388,84 +256,6 @@ def main() -> None:
             release_deferred()
             spark.catalog.clearCache()
 
-    for _pass in range(3):
-        _timed_pass()
-        canary_samples.append(_canary(spark))
-
-    # self-retry on canary drift (VERDICT r8 #6): if the steady canary
-    # tail says a pass ran contended, one extra min-merged pass stops a
-    # single polluted window from setting the committed band; the extra
-    # canary sample keeps the (still-reported) drift diagnosable
-    retry_pass = needs_canary_retry(canary_samples)
-    if retry_pass:
-        print(
-            f"canary steady drift >= {CANARY_RETRY_THRESHOLD}: "
-            "re-running one timed pass",
-            file=sys.stderr,
-        )
-        _timed_pass()
-        canary_samples.append(_canary(spark))
-
-    # one-shot FULL sweep (VERDICT r4 #6): every registered query not in
-    # the regression list above runs ONCE so no query's cost is unknown;
-    # surprises (> 2 s) are called out separately. Single-pass times on
-    # this host carry 4-10x contention noise — treat the >2s list as a
-    # triage queue, not a regression gate (that's what BENCH_QUERIES is
-    # for).
-    full_sweep: dict[str, float] = {}
-    for name in registry:
-        if name in timings:
-            continue
-        t0 = time.perf_counter()
-        try:
-            registry[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            full_sweep[name] = round(time.perf_counter() - t0, 3)
-        except Exception as ex:  # a sweep failure must be visible, not fatal
-            full_sweep[name] = -1.0
-            print(f"full_sweep FAILED {name}: {ex}", file=sys.stderr)
-        release_deferred()
-        spark.catalog.clearCache()
-
-    canary_samples.append(_canary(spark))
-    steady = canary_samples[1:]  # sample 0 can still carry C2-JIT warmup
-    canary = {
-        "samples": canary_samples,  # start, after each of 3 passes, end
-        "drift": round(max(canary_samples) / max(min(canary_samples), 1e-9), 2),
-        # the contention signal proper: spread once the JVM is fully
-        # warm — an idle box reads ~1.0-1.2 here even when sample 0's
-        # JIT warmup pushes the overall drift toward ~2
-        "steady_drift": round(max(steady) / max(min(steady), 1e-9), 2),
-        # True when the drift rule triggered the extra min-merged pass
-        "retry_pass": retry_pass,
-        # the gate, stated in the artifact (VERDICT r12 #6): "clean" =
-        # steady tail under the threshold (whole-run `drift` above it
-        # is sample-0 JIT warmup by construction and does NOT dirty the
-        # headline — min-of-N drops the warm-up pass); "retried_clean" =
-        # one contended pass detected, extra min-merged pass ran and the
-        # tail settled; "contended" = still dirty after the one retry —
-        # treat the committed band as an upper bound
-        "threshold": CANARY_RETRY_THRESHOLD,
-        "verdict": (
-            "contended"
-            if max(steady) / max(min(steady), 1e-9) >= CANARY_RETRY_THRESHOLD
-            else ("retried_clean" if retry_pass else "clean")
-        ),
-        # cross-run ambient check (VERDICT r13 #5): absolute canary
-        # floor vs the committed prior round — catches the whole-run
-        # slow-host window the in-run steady_drift is blind to
-        "vs_prior": canary_vs_prior(
-            steady,
-            load_prior_canary(
-                os.path.dirname(os.path.abspath(__file__)),
-                _current_round(),
-                "" if sf == 0.1 else f"_sf{sf}",
-            ),
-        ),
-    }
-
-    total_all = round(sum(timings.values()), 3)
     # tier split (VERDICT r3 #7 / r9 #4): queries tagged `test-config`
     # are oracle-pinned configurations deliberately retained for the
     # correctness gate (e.g. fixed-k SemDeDup, quadratic-per-cluster at
@@ -475,8 +265,7 @@ def main() -> None:
     # <=1 s anchor-boundary wait), not by any distributed plan. Both are
     # reported apart, and the HEADLINE `value` is the production tier
     # alone so it tracks plan cost (VERDICT r9 #4: "headline total ≈
-    # production plan time"); `total_all_tiers` keeps the r9-comparable
-    # whole-list sum.
+    # production plan time").
     def _tagged(tag: str) -> set:
         return {n for n in timings if tag in getattr(registry[n], "tags", ())}
 
@@ -493,31 +282,13 @@ def main() -> None:
     payload = {
         "metric": "headline_queries_total",
         "value": tiers["production"],
-        "total_all_tiers": total_all,
         "unit": "sec",
-        "passes": 3 + int(retry_pass),  # headline timings are min-of-N
-        "canary": canary,  # 5 fixed-cost probes; drift>~2 ⇒ contended run
+        "passes": PASSES,
         "queries": timings,
         "tiers": tiers,
-        "full_sweep": full_sweep,
-        "full_sweep_over_2s": sorted(
-            n for n, v in full_sweep.items() if v > 2.0 or v < 0
-        ),
         "sf": sf,
     }
     print(json.dumps(payload))
-    # the driver stores only a 2000-char tail of this stdout (parsed:null
-    # since r2, VERDICT r7 #4) — persist the COMPLETE machine-readable
-    # artifact in the repo so every per-query number survives the round.
-    # Non-default sf dirs get their own suffix so a scaled-fixture run
-    # can never clobber the round's committed sf0.1 headline artifact.
-    suffix = "" if sf == 0.1 else f"_sf{sf}"
-    local_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"BENCH_LOCAL_r{_current_round()}{suffix}.json",
-    )
-    with open(local_path, "w") as f:
-        json.dump(payload, f, indent=1, sort_keys=True)
     # teardown hygiene (VERDICT r11 #6): the RocksDB/HDFS StateStore
     # maintenance thread can race session shutdown and dump a benign
     # stack trace AFTER the JSON line (rc stays 0, bench complete) —

@@ -1,13 +1,11 @@
 """The Kinesis consumer: a REAL registered Spark streaming source, in
 pure Python.
 
-``streaming/source.py``'s ``kind="kinesis"`` branch targets the
-spark-sql-kinesis connector JAR, which does not exist in this
-environment — the one §2.1 #1 surface that had never executed (VERDICT
-r7 "What's missing" #1). Spark 4's public Python DataSource API
-(``pyspark.sql.datasource``) closes that gap without any jar: this
-module registers ``format("kinesis_py")``, a first-class
-``spark.readStream`` source whose offsets live in Spark's OWN
+It needs no connector JAR: Spark 4's public Python DataSource API
+(``pyspark.sql.datasource``) carries it, and ``streaming/source.py``'s
+``kind="kinesis"`` branch (the reference pipeline's Kinesis path)
+reads through it. This module registers ``format("kinesis_py")``, a
+first-class ``spark.readStream`` source whose offsets live in Spark's OWN
 checkpoint, wired to the public Kinesis HTTP API through boto3 — the
 same wire protocol the reference's consumer speaks
 (StreamingJob.java:74-110), exercised in tests against the in-process

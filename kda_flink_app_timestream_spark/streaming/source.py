@@ -5,10 +5,10 @@ The reference consumes an Amazon Kinesis stream as UTF-8 strings
 fixed 1000 ms / 10000-records polling, SimpleStringSchema at :102).
 Here the source is a factory keyed by kind:
 
-- ``kinesis``  — production path via the Kinesis Structured Streaming
-  connector (connector jar not present in this environment; gated).
-  The jar-free consumer of the same stream is the registered
-  ``format("kinesis_py")`` source (``streaming/kinesis_pysource.py``).
+- ``kinesis``  — the registered ``format("kinesis_py")`` source
+  (``streaming/kinesis_pysource.py``): Spark-checkpointed offsets, one
+  executor task per shard, and the reference's poll cap
+  (SHARD_GETRECORDS_MAX, StreamingJob.java:93-94) as its default.
 - ``file``     — parquet/json/text directory stream (tests, replay).
 - ``rate``     — synthetic generator reproducing the reference's data
   generator (sources/generator.py).
@@ -29,44 +29,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-# Kinesis consumer tuning mirroring StreamingJob.java:84-95 — translated
-# to the spark-sql-kinesis connector's option names.
-KINESIS_DEFAULT_OPTIONS = {
-    "kinesis.executor.maxFetchTimeInMs": "1000",  # SHARD_GETRECORDS_INTERVAL_MILLIS
-    "kinesis.executor.maxFetchRecordsPerShard": "10000",  # SHARD_GETRECORDS_MAX
-}
-
-
-def kinesis_option_map(
-    stream_name: str | None,
-    region: str | None = None,
-    options: dict[str, Any] | None = None,
-) -> dict[str, str]:
-    """The EXACT option map the connector branch passes to
-    ``readStream.format("kinesis")`` — extracted as a pure function so
-    the mapping is unit-testable without the connector jar (VERDICT r7
-    #7: this branch is the one §2 surface that has never executed in
-    this jar-less environment; the semantics it encodes — the
-    reference's consumer config at StreamingJob.java:77-95 — are pinned
-    here instead). Precedence: caller options > reference-derived
-    defaults > built-in fallbacks (region us-east-1 mirroring the
-    reference's DEFAULT_REGION_NAME, initialPosition LATEST matching
-    its STREAM_INITIAL_POSITION default)."""
-    merged = {**KINESIS_DEFAULT_OPTIONS, **(options or {})}
-    merged.setdefault("initialPosition", "LATEST")
-    # the options dict outranks the convenience args (last-option-wins,
-    # matching the old reader.option call order): an explicit
-    # options={"region": ...} must not be silently overwritten
-    merged.setdefault("streamName", stream_name)
-    merged.setdefault("region", region or "us-east-1")
-
-    def to_str(v) -> str:
-        # DataStreamReader.option lowercases booleans; str() would send
-        # 'True'/'False' to a connector that parses with == "true"
-        return "true" if v is True else "false" if v is False else str(v)
-
-    return {k: to_str(v) for k, v in merged.items()}
 
 
 def streaming_source(
@@ -96,12 +58,17 @@ def streaming_source(
 
         df = service_log_rate_stream(spark, **options)
     elif kind == "kinesis":
-        reader = spark.readStream.format("kinesis")
-        for k, v in kinesis_option_map(stream_name, region, options).items():
-            reader = reader.option(k, v)
-        # connector emits binary `data`; CAST replaces SimpleStringSchema
-        # (StreamingJob.java:102)
-        df = reader.load().select(F.col("data").cast("string").alias("value"))
+        from .kinesis_pysource import KinesisPythonDataSource
+
+        spark.dataSource.register(KinesisPythonDataSource)
+        reader = spark.readStream.format("kinesis_py")
+        for k, v in {"streamName": stream_name, "region": region, **options}.items():
+            if v is not None:
+                reader = reader.option(k, v)
+        # the source emits binary `data`: a string CAST replaces
+        # SimpleStringSchema (StreamingJob.java:102); gunzip takes the bytes
+        data = F.col("data") if decode != "none" else F.col("data").cast("string")
+        df = reader.load().select(data.alias("value"))
     else:
         raise ValueError(f"unknown source kind: {kind!r}")
 

@@ -1,18 +1,15 @@
-"""Local rehearsal of the driver's correctness gate.
+"""The catalog gate: every registered query against its DuckDB oracle.
 
-Runs the first N names of ``_ordered_names()`` (the exact set the
-driver's 50-slot window will score next round) through the repo's
+Runs the registered queries, in registry order, through the repo's
 canonical driver-twin compare (``tests/oracle_utils.compare_query``:
 Spark collect vs DuckDB fetchall, columns sorted by name, rows sorted,
 exact value reprs). Prints one line per query and a summary; exits
 non-zero on any mismatch so it can gate a commit.
 
-Usage: python scripts/rehearse_window.py [N] [SF_DIR]
-       # defaults: N=50, SF_DIR=/root/testdata/sf0.01
-       # N >= len(REGISTRY) sweeps the whole catalog (derive it live —
-       # hardcoded counts here went stale twice, ADVICE r10)
-       # N may also be a comma-separated name list (e.g. the
-       # _RESCORE_AFTER set for a changed-query sweep at 10x)
+Usage: python scripts/rehearse_window.py [all|NAME,NAME,...] [SF_DIR]
+       # defaults: all (the whole registry), the sf0.01 test data dir
+       # a comma-separated name list selects queries by name
+       # REHEARSE_SESSION=build uses the tuned session (10x+ dirs)
 """
 
 from __future__ import annotations
@@ -25,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    spec = sys.argv[1] if len(sys.argv) > 1 else "50"
+    spec = sys.argv[1] if len(sys.argv) > 1 else "all"
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
 
     if os.environ.get("REHEARSE_SESSION") == "build":
@@ -43,11 +40,8 @@ def main() -> int:
     import __spark_entry__ as e
     from tests.oracle_utils import compare_query, duckdb_connection
 
-    if "," in spec or not spec.isdigit():
-        names = [n for n in spec.split(",") if n]
-    else:
-        names = e._ordered_names()[: int(spec)]
     qs, sqls = e.queries(), e.oracle_sql()
+    names = list(qs) if spec == "all" else [n for n in spec.split(",") if n]
     con = duckdb_connection(sf)
 
     failures = []

@@ -1,162 +1,101 @@
 """Kinesis source path (SURVEY §2 #1 — StreamingJob.java:74-110).
 
-Three layers of coverage, by what the environment allows:
+Every layer runs against the in-process fake of the public Kinesis
+HTTP API (``tests/fake_kinesis.py``); none needs a connector jar or an
+external endpoint:
 
-1. **Always** — factory plumbing: the ``kinesis`` branch must march all
-   the way to Spark's connector lookup (the jar is absent here), and
-   the poll tuning must mirror the reference's consumer config.
-2. **Always (r4)** — a REAL produce→consume round-trip through the
-   ``kinesis_py`` batch snapshot against a vendored in-process fake of
-   the public Kinesis HTTP API (``tests/fake_kinesis.py``): gzip'd
-   reference-format records go in via ``PutRecords``, come back out
-   via shard iterators, gunzip, and parse — the produce→consume
-   semantics the reference validates only manually (README.md:33-36),
-   now executed in-sandbox.
-3. **Env-gated** — the same round-trip through the Spark CONNECTOR
-   (``streaming_source(kind="kinesis")``) against a real
-   kinesalite/LocalStack endpoint with the connector jar on the
-   classpath; skip-guarded behind ``KINESIS_ENDPOINT_URL`` because
-   neither exists in this sandbox.
-4. **Always (driver-r8)** — a REAL registered Spark source without any
-   jar: ``format("kinesis_py")`` via Spark 4's public Python DataSource
-   API (``streaming/kinesis_pysource.py``) — engine-managed offsets,
+1. **The reference pipeline** — ``start_reference_pipeline(
+   source_kind="kinesis")`` reads gzip'd reference-format records
+   through ``streaming_source(kind="kinesis")`` → ``format("kinesis_py")``,
+   gunzips, parses and lands every record exactly once in the sink or
+   the late slice; the poll cap mirrors the reference's consumer config.
+2. **The batch snapshot** — a produce→consume round-trip through
+   ``spark.read.format("kinesis_py")``: records go in via
+   ``PutRecords``, come back out via shard iterators, gunzip, and
+   parse — the produce→consume semantics the reference validates only
+   manually (README.md:33-36).
+3. **The registered stream source** — ``format("kinesis_py")`` via
+   Spark 4's public Python DataSource API
+   (``streaming/kinesis_pysource.py``): engine-managed offsets,
    checkpoint restart exactly-once, failure replay from offset bounds,
-   resharding — all executed against the in-process fake endpoint.
-   Reader-contract tests drive ``initialOffset`` / ``latestOffset`` /
-   ``partitions`` / ``read`` directly under a virtual clock.
+   resharding. Reader-contract tests drive ``initialOffset`` /
+   ``latestOffset`` / ``partitions`` / ``read`` directly under a
+   virtual clock.
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
 import gzip
-import os
+import json
 
 import pytest
 
-from kda_flink_app_timestream_spark.streaming.source import (
-    KINESIS_DEFAULT_OPTIONS,
-    kinesis_option_map,
-    streaming_source,
-)
-
-ENDPOINT = os.environ.get("KINESIS_ENDPOINT_URL") or os.environ.get(
-    "AWS_ENDPOINT_URL"
-)
-
-
-def test_kinesis_branch_reaches_connector_lookup(spark):
-    """Without the connector jar the branch must fail at Spark's
-    DataSource lookup (mentioning the missing 'kinesis' source) — not
-    earlier in our factory code."""
-    with pytest.raises(Exception) as excinfo:
-        streaming_source(
-            spark, kind="kinesis", stream_name="svc-logs", region="us-east-1"
-        )
-    msg = str(excinfo.value).lower()
-    assert "kinesis" in msg, f"failed before the connector lookup: {msg[:200]}"
-
-
-def test_kinesis_option_map_exact_contents():
-    """VERDICT r7 #7: the connector branch has never executed here (no
-    jar), so the EXACT option map it would hand the reader is pinned as
-    a pure function. Defaults case: reference poll tuning
-    (StreamingJob.java:90-94), LATEST initial position, us-east-1
-    region fallback (its DEFAULT_REGION_NAME, StreamingJob.java:66)."""
-    assert kinesis_option_map("svc-logs") == {
-        "streamName": "svc-logs",
-        "region": "us-east-1",
-        "initialPosition": "LATEST",
-        "kinesis.executor.maxFetchTimeInMs": "1000",
-        "kinesis.executor.maxFetchRecordsPerShard": "10000",
-    }
-
-
-def test_kinesis_option_map_caller_overrides_win():
-    """Caller options override the reference-derived defaults (the
-    ParameterToolUtils precedence, CLI > defaults) and non-string
-    values are stringified the way DataStreamReader.option would."""
-    got = kinesis_option_map(
-        "s",
-        region="eu-west-1",
-        options={
-            "kinesis.executor.maxFetchRecordsPerShard": 5000,
-            "initialPosition": "TRIM_HORIZON",
-            "awsUseInstanceProfile": "false",
-        },
-    )
-    assert got["region"] == "eu-west-1"
-    assert got["initialPosition"] == "TRIM_HORIZON"
-    assert got["kinesis.executor.maxFetchRecordsPerShard"] == "5000"
-    assert got["kinesis.executor.maxFetchTimeInMs"] == "1000"  # default kept
-    assert got["awsUseInstanceProfile"] == "false"  # passthrough preserved
-    # the options DICT outranks the convenience args (last-option-wins,
-    # the old reader.option call order — review finding this round: an
-    # early version force-overwrote region/streamName after the merge)
-    got2 = kinesis_option_map(
-        "s", region="us-east-1", options={"region": "ap-south-1", "streamName": "x"}
-    )
-    assert got2["region"] == "ap-south-1"
-    assert got2["streamName"] == "x"
-    # and booleans reach the connector lowercased, as DataStreamReader
-    # would send them — str(False) = 'False' would misread downstream
-    assert kinesis_option_map("s", options={"flag": False})["flag"] == "false"
-
 
 def test_kinesis_default_options_mirror_reference_tuning():
-    """The poll tuning must match StreamingJob.java:84-95
-    (SHARD_GETRECORDS_INTERVAL_MILLIS=1000, SHARD_GETRECORDS_MAX=10000)."""
-    assert KINESIS_DEFAULT_OPTIONS["kinesis.executor.maxFetchTimeInMs"] == "1000"
-    assert (
-        KINESIS_DEFAULT_OPTIONS["kinesis.executor.maxFetchRecordsPerShard"]
-        == "10000"
+    """The per-shard poll cap must match the reference's
+    SHARD_GETRECORDS_MAX=10000 (StreamingJob.java:93-94)."""
+    from kda_flink_app_timestream_spark.streaming import kinesis_pysource
+
+    assert kinesis_pysource.DEFAULT_MAX_RECORDS == 10_000
+
+
+def test_kinesis_roundtrip_against_local_endpoint(spark, tmp_path):
+    """The reference job end to end on its Kinesis path: gzip'd
+    service-log records produced to a 2-shard stream are consumed by
+    ``start_reference_pipeline(source_kind="kinesis")``, gunzipped,
+    parsed and routed; each produced record lands in the JSONL sink or
+    the late slice exactly once."""
+    from kda_flink_app_timestream_spark.sources.generator import service_log_batch
+    from kda_flink_app_timestream_spark.streaming.pipeline import (
+        start_reference_pipeline,
     )
 
+    from .fake_kinesis import FakeKinesis
 
-@pytest.mark.skipif(
-    not ENDPOINT,
-    reason="no kinesalite/LocalStack endpoint (set KINESIS_ENDPOINT_URL)",
-)
-def test_kinesis_roundtrip_against_local_endpoint(spark):
-    """Full produce→consume round-trip against a local Kinesis clone.
+    produced = [
+        (r["value"], r["partition_key"])
+        for r in service_log_batch(spark, n_rows=40).collect()
+    ]
+    late_ids: list[str] = []
 
-    Requires: a reachable endpoint, boto3, and the spark-sql-kinesis
-    connector on the session classpath — all environment-provided."""
-    boto3 = pytest.importorskip("boto3")
+    def late_sink(df, epoch_id):
+        late_ids.extend(r["aws_account_id"] for r in df.collect())
 
-    stream = "kda-spark-test-stream"
-    client = boto3.client(
-        "kinesis",
-        endpoint_url=ENDPOINT,
-        region_name="us-east-1",
-        aws_access_key_id="test",
-        aws_secret_access_key="test",
-    )
-    try:
-        client.create_stream(StreamName=stream, ShardCount=1)
-        client.get_waiter("stream_exists").wait(StreamName=stream)
-    except client.exceptions.ResourceInUseException:
-        pass
-    payloads = [b"Operation=GetTable", b"Operation=CreateTable"]
-    for i, data in enumerate(payloads):
-        client.put_record(StreamName=stream, Data=data, PartitionKey=str(i))
-
-    df = streaming_source(
-        spark,
-        kind="kinesis",
-        stream_name=stream,
-        region="us-east-1",
-        options={"endpointUrl": ENDPOINT, "initialPosition": "TRIM_HORIZON"},
-    )
-    q = (
-        df.writeStream.format("memory")
-        .queryName("kinesis_roundtrip")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), 'query did not terminate in 120s'
-    got = {r["value"] for r in spark.table("kinesis_roundtrip").collect()}
-    assert {p.decode() for p in payloads} <= got
+    sink_dir = str(tmp_path / "sink")
+    with FakeKinesis() as fk:
+        client = _fake_client(fk)
+        client.create_stream(StreamName="svc-logs", ShardCount=2)
+        client.put_records(
+            StreamName="svc-logs",
+            Records=[
+                {"Data": gzip.compress(v.encode()), "PartitionKey": pk}
+                for v, pk in produced
+            ],
+        )
+        q = start_reference_pipeline(
+            spark,
+            source_kind="kinesis",
+            decode="gzip",
+            available_now=True,
+            sink_dir=sink_dir,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            late_sink=late_sink,
+            stream_name="svc-logs",
+            options={
+                "endpointUrl": fk.endpoint_url,
+                "accessKeyId": "test",
+                "secretAccessKey": "test",
+            },
+        )
+        assert q.awaitTermination(120), "query did not terminate in 120s"
+    written = [
+        json.loads(line)["dimensions"]["awsaccountid"]
+        for f in glob.glob(f"{sink_dir}/epoch=*/part=*.jsonl")
+        for line in open(f)
+    ]
+    assert sorted(written + late_ids) == sorted(pk for _, pk in produced)
 
 
 class _VClock:

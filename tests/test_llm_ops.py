@@ -1472,7 +1472,7 @@ def test_sub_code_sql_matches_python_argmin(spark):
     """r15 optimization guard: the codebook expressions are assembled
     as per-stage SQL strings (_sub_code_sql / _adc_sum_sql replaced the
     Column-API composition; physical plans verified identical modulo
-    lambda numbering — plans/r15). Pin the generated SQL's semantics
+    lambda numbering when the change landed). Pin the generated SQL's semantics
     against a pure-Python reference: exact integer argmin per subspace
     with ties to the smaller code id, and the ADC sum through the
     code→slot translation — including a GAPPED codebook (the sparse

@@ -90,38 +90,6 @@ def test_parser_equals_token_semantics(spark):
     assert out["aws_account_id"] == "12"
 
 
-def test_kinesis_source_optional_integration(spark):
-    """Real-Kinesis path (StreamingJob.java:74-110), exercised only when
-    a kinesalite/LocalStack endpoint is provided via
-    ``KINESIS_ENDPOINT_URL`` — absent in this sandbox, so the test
-    documents the gap honestly instead of faking a pass."""
-    import os
-
-    endpoint = os.environ.get("KINESIS_ENDPOINT_URL")
-    if not endpoint:
-        pytest.skip("no kinesalite/LocalStack endpoint (set KINESIS_ENDPOINT_URL)")
-    boto3 = pytest.importorskip("boto3")
-
-    from kda_flink_app_timestream_spark.streaming.source import streaming_source
-
-    client = boto3.client("kinesis", endpoint_url=endpoint, region_name="us-east-1")
-    name = "kda_test_stream"
-    client.create_stream(StreamName=name, ShardCount=1)
-    try:
-        payload = "Operation=GetTable\nTime=1.5 ms\nEndTime=1700000000000"
-        client.put_record(StreamName=name, Data=payload.encode(), PartitionKey="1")
-        df = streaming_source(
-            spark, kind="kinesis", stream_name=name,
-            options={"endpointUrl": endpoint, "initialPosition": "TRIM_HORIZON"},
-        )
-        q = df.writeStream.format("memory").queryName("kin").trigger(availableNow=True).start()
-        assert q.awaitTermination(60), 'query did not terminate in 60s'
-        vals = [r["value"] for r in spark.sql("SELECT * FROM kin").collect()]
-        assert payload in vals
-    finally:
-        client.delete_stream(StreamName=name)
-
-
 def test_kinesis_substitute_file_source_equivalent(spark, tmp_path):
     """The file source + explicit gzip decode — the sandbox stand-in for
     Kinesis — must yield byte-identical ``value`` rows to decoding the
@@ -148,20 +116,6 @@ def test_kinesis_substitute_file_source_equivalent(spark, tmp_path):
     assert q.awaitTermination(60), 'query did not terminate in 60s'
     got = sorted(r["value"] for r in spark.sql("SELECT * FROM filesub").collect())
     assert got == sorted(blobs)
-
-
-def test_kinesis_consumer_defaults_mirror_reference(spark):
-    """The connector options must carry the reference's polling tuning
-    (SHARD_GETRECORDS_INTERVAL_MILLIS=1000, SHARD_GETRECORDS_MAX=10000,
-    StreamingJob.java:84-95)."""
-    from kda_flink_app_timestream_spark.streaming.source import (
-        KINESIS_DEFAULT_OPTIONS,
-    )
-
-    assert KINESIS_DEFAULT_OPTIONS["kinesis.executor.maxFetchTimeInMs"] == "1000"
-    assert (
-        KINESIS_DEFAULT_OPTIONS["kinesis.executor.maxFetchRecordsPerShard"] == "10000"
-    )
 
 
 def test_gzip_decode(spark):
