@@ -94,7 +94,12 @@ class _Stream:
         shard["records"].append(
             {
                 "SequenceNumber": seq,
-                "ApproximateArrivalTimestamp": time.time(),
+                # millisecond precision, as the real service stamps: a raw
+                # float within 0.5 us below a whole second reads as that
+                # second once botocore rounds it to microseconds, while
+                # AT_TIMESTAMP here would compare the raw float — the
+                # record would fall between two adjacent batches
+                "ApproximateArrivalTimestamp": round(time.time(), 3),
                 "Data": data_b64,
                 "PartitionKey": partition_key,
             }

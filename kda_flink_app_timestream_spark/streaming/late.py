@@ -84,8 +84,9 @@ class LateDataSplitter:
         if not progress:
             return None
         wm = (progress.get("eventTime") or {}).get("watermark")
-        # Spark reports epoch-0 before the first real watermark; for a
-        # STATELESS query it never advances past it at all
+        # Spark reports epoch-0 before the first real watermark. On 4.1
+        # a stateless query's watermark does advance, but progress
+        # reports it one batch late
         if not wm or wm.startswith("1970-01-01T00:00:00"):
             return None
         parsed = datetime.fromisoformat(wm.replace("Z", "+00:00"))
@@ -95,8 +96,9 @@ class LateDataSplitter:
         """Effective watermark: the engine's (stateful queries) or the
         splitter's own monotonous max-event-time tracker — the direct
         analog of the reference's ``forMonotonousTimestamps`` strategy
-        (StreamingJob.java:132-134), needed because Spark only advances
-        the progress watermark when a stateful operator consumes it."""
+        (StreamingJob.java:132-134), needed because the progress
+        watermark is absent for a new query's first batch and reported
+        one batch late after that."""
         candidates = [w for w in (self._progress_watermark(), self._max_event_ts) if w]
         return max(candidates) if candidates else None
 

@@ -23,6 +23,7 @@ import os
 from collections.abc import Callable, Iterable, Iterator, Sequence
 from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, Row
 
 DEFAULT_BATCH_SIZE = 50  # TimestreamIngestBatchSize default, StreamingJob.java:174
@@ -97,6 +98,12 @@ class BatchingForeachWriter:
     driver. For the JSONL test backend, files are named
     ``epoch={epoch}/part={pid}.jsonl`` and overwritten on replay —
     idempotence on (epoch, partition).
+
+    ``written`` and ``rejected`` are driver-readable accumulators: every
+    partition adds ``write_chunked``'s counts, so a record the backend
+    rejects is counted on the engine side (cumulative over the writer's
+    batches; a replayed batch counts again). Build the writer once the
+    session is up — the accumulators live in its SparkContext.
     """
 
     def __init__(
@@ -111,11 +118,17 @@ class BatchingForeachWriter:
         self._factory = backend_factory
         self._jsonl_dir = jsonl_dir
         self._batch_size = batch_size
+        sc = SparkContext._active_spark_context
+        if sc is None:
+            raise RuntimeError("BatchingForeachWriter needs an active SparkContext")
+        self.written = sc.accumulator(0)
+        self.rejected = sc.accumulator(0)
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         batch_size = self._batch_size
         factory = self._factory
         jsonl_dir = self._jsonl_dir
+        written_acc, rejected_acc = self.written, self.rejected
 
         def handle_partition(pid_rows: Iterator[Row]) -> None:
             from pyspark import TaskContext
@@ -124,12 +137,13 @@ class BatchingForeachWriter:
             pid = ctx.partitionId() if ctx else 0
             attempt = ctx.taskAttemptId() if ctx else 0
             if factory is not None:
-                write_batch = factory()
-                write_chunked(pid_rows, write_batch, batch_size)
+                written, rejected = write_chunked(pid_rows, factory(), batch_size)
             else:
-                _write_jsonl_partition(
+                written, rejected = _write_jsonl_partition(
                     pid_rows, jsonl_dir, epoch_id, pid, batch_size, attempt
                 )
+            written_acc.add(written)
+            rejected_acc.add(rejected)
 
         batch_df.foreachPartition(handle_partition)
 
@@ -141,7 +155,7 @@ def _write_jsonl_partition(
     pid: int,
     batch_size: int,
     attempt: int = 0,
-) -> None:
+) -> tuple[int, int]:
     """Test/local backend: newline-delimited JSON, one file per
     (epoch, partition), atomic rename → idempotent replay. The tmp name
     carries the task ATTEMPT id: a speculative or zombie attempt running
@@ -155,8 +169,9 @@ def _write_jsonl_partition(
             for rec in batch:
                 f.write(json.dumps(rec, default=str) + "\n")
 
-        write_chunked(rows, write_batch, batch_size)
+        counts = write_chunked(rows, write_batch, batch_size)
     os.replace(tmp, final)
+    return counts
 
 
 def timestream_backend_factory(

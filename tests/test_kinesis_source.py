@@ -1264,6 +1264,38 @@ def test_kinesis_pysource_partitioned_boundary_lag():
         assert 0 < len(got) < 8  # the lag genuinely deferred the tail
 
 
+def test_kinesis_pysource_partitioned_sub_microsecond_stamp_lands_once():
+    """A record stamped within half a microsecond below a batch boundary
+    lands in exactly one of the two adjacent batches. botocore rounds an
+    arrival stamp to whole microseconds, so the reader sees such a
+    record AT the boundary and ends batch N before it; the service must
+    start batch N+1's AT_TIMESTAMP iterator on it, not after it."""
+    from kda_flink_app_timestream_spark.streaming import kinesis_pysource as kps
+
+    boundary = 1_700_000_301
+    stamps = [boundary - 0.5, boundary - 3e-7, boundary + 0.2]
+    with _virtual_fake(stamps[0]) as (clock, fk):
+        client = _fake_client(fk)
+        client.create_stream(StreamName="pysrc-edge", ShardCount=1)
+        for i, stamp in enumerate(stamps):
+            clock.now = stamp
+            client.put_record(
+                StreamName="pysrc-edge", Data=f"e{i}".encode(), PartitionKey="k"
+            )
+        (shard,) = [
+            s["ShardId"]
+            for s in client.list_shards(StreamName="pysrc-edge")["Shards"]
+        ]
+        reader = _reader(fk, "pysrc-edge")
+        cut = {shard: kps.AT_TS + str(boundary)}
+        before = _payloads(_batch(reader, {shard: kps.TRIM}, cut))
+        after = _payloads(
+            _batch(reader, cut, {shard: kps.AT_TS + str(boundary + 1)})
+        )
+    # millisecond stamps put e1 exactly on the boundary: batch N+1
+    assert (before, after) == (["e0"], ["e1", "e2"])
+
+
 def test_kinesis_pysource_partitioned_future_anchor_holds_not_blocks():
     """An explicit AT_TIMESTAMP anchor AHEAD of the clock (start
     processing from a future instant) must neither erode nor block:

@@ -150,6 +150,34 @@ def test_streaming_foreachbatch_into_fake_timestream(spark, tmp_path):
         assert len(landed) == 28
         got = {r["MeasureValue"] for r in landed}
         assert got == {f"{i}.25" for i in range(30) if i not in (5, 14)}
+        # the engine's own counts agree with what the service stored
+        assert (writer.written.value, writer.rejected.value) == (28, 2)
+
+
+def test_foreach_writer_counts_written_and_rejected(spark):
+    """The writer sums every partition's (written, rejected) into its
+    driver-side accumulators. The backend rejects index 0 of every
+    chunk (and accepts the repaired remainder), so 3 partitions of 10
+    rows in chunks of 4 (4+4+2) reject 9 records and write 21."""
+    from kda_flink_app_timestream_spark.streaming.sink import RejectedRecords
+
+    def factory():
+        calls = 0
+
+        def write_batch(batch):
+            nonlocal calls
+            calls += 1
+            if calls % 2:  # a fresh chunk: reject its first record
+                raise RejectedRecords([0], "poisoned")
+
+        return write_batch
+
+    writer = BatchingForeachWriter(factory, batch_size=4)
+    writer(spark.range(0, 30, numPartitions=3), 0)
+    assert (writer.written.value, writer.rejected.value) == (21, 9)
+    # the next batch adds to the same counters: 5 rows = chunks 4+1
+    writer(spark.range(0, 5, numPartitions=1), 1)
+    assert (writer.written.value, writer.rejected.value) == (24, 11)
 
 
 def test_to_timestream_record_converts_datetime_time():
