@@ -126,9 +126,9 @@ BENCH_QUERIES = [
     # r8: Kinesis through a REAL registered Spark source (Python
     # DataSource API) — engine-managed offsets, produce->consume->parse
     "kinesis_pysource_consume",
-    # r8: the sink side through a REAL registered Spark sink (Python
-    # DataSource writer API) — 4 micro-batches, write->commit barrier,
-    # chunked writes at the reference's batch size
+    # r8: the sink side through the engine's Timestream writer
+    # (foreachBatch + BatchingForeachWriter) — 4 micro-batches, chunked
+    # writes at the reference's batch size
     "timestream_pysink_roundtrip",
     # r8: executor-parallel batch snapshot through the registered format
     # (one InputPartition per shard)

@@ -644,24 +644,25 @@ def kinesis_pysource_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "timestream",
         "streaming",
         "sink",
-        "datasource-api",
         "reference-parity",
         "harness-roundtrip",
     ),
 )
 def timestream_pysink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's WHOLE sink side through a REAL registered Spark
-    sink: points stream → ``writeStream.format("timestream_py")``
-    (streaming/timestream_pysink.py, Spark 4's Python DataSource writer
-    API) → DDL-bootstrapped fake Timestream endpoint (real boto3 wire
+    """The reference's WHOLE sink side through the engine's one
+    Timestream writer: points stream → ``foreachBatch(
+    BatchingForeachWriter(timestream_backend_factory(...)))`` →
+    DDL-bootstrapped fake Timestream endpoint (real boto3 wire
     protocol, TimestreamInitializer's ConflictException-idempotent
     CreateDatabase/CreateTable first) → records read back from the
     store and compared to the identity oracle. The staged 4-file source
     with ``maxFilesPerTrigger=1`` drives FOUR genuine micro-batches
-    through the sink's write→commit barrier, each partition chunking at
-    the reference's 50-record batch size with rejection repair
-    (TimestreamSink.java:88-142) — so a record lost, duplicated, or
-    mangled across ANY batch/partition/chunk boundary hash-mismatches.
+    through the sink, each partition's client built on the executor and
+    chunking at the reference's 50-record batch size with rejection
+    repair (TimestreamSink.java:88-142); the TimestampType ``time``
+    column reaches the wire as epoch millis — so a record lost,
+    duplicated, or mangled across ANY batch/partition/chunk boundary
+    hash-mismatches.
 
     Driver-side read-back is bounded by the event_cap=1200 slice (the
     same pin as the kinesis fixtures).
@@ -675,11 +676,10 @@ def timestream_pysink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..streaming.bootstrap import initialize_timestream_boto3
+    from ..streaming.sink import BatchingForeachWriter, timestream_backend_factory
     from ..streaming.timestream_fake import FakeTimestream
-    from ..streaming.timestream_pysink import TimestreamPythonDataSource
     from .streaming_queries import _events_stream
 
-    spark.dataSource.register(TimestreamPythonDataSource)
     points = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_id") <= 1200)
@@ -704,15 +704,19 @@ def timestream_pysink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             endpoint_url=ft.endpoint_url,
             client_kwargs=creds,
         )
+        writer = BatchingForeachWriter(
+            timestream_backend_factory(
+                "us-east-1",
+                "svcdb",
+                "svcpoints",
+                endpoint_url=ft.endpoint_url,
+                client_kwargs=creds,
+            )
+        )
         ckpt = tempfile.mkdtemp(prefix="timestream_pysink_ckpt_")
         try:
             q = (
-                points.writeStream.format("timestream_py")
-                .option("database", "svcdb")
-                .option("table", "svcpoints")
-                .option("endpointUrl", ft.endpoint_url)
-                .option("accessKeyId", "test")
-                .option("secretAccessKey", "test")
+                points.writeStream.foreachBatch(writer)
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
                 .start()

@@ -1,12 +1,13 @@
 """End-to-end reference pipeline assembly — the StreamingJob.main analog
 (StreamingJob.java:112-186): source → parse → event-time/watermark →
-windowed processing → batching sink, with the late-data side output.
+batching sink, with the late-data side output.
 
 The reference's window is an identity pass-through (its
 ProcessAllWindowFunction aggregates nothing, StreamingJob.java:151-166),
-so the default pipeline forwards parsed points to the sink per
-micro-batch, with the late split replacing the Flink side output; a
-windowed-aggregate variant is one flag away.
+so the pipeline forwards parsed points to the sink per micro-batch,
+with the late split replacing the Flink side output. Windowed
+aggregates are separate operators (``streaming/windows.py``), not a
+pipeline mode.
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.parse import parse_service_logs
 from .late import LateDataSplitter
-from .sink import DEFAULT_BATCH_SIZE, BatchingForeachWriter
 from .source import streaming_source
 
 
@@ -39,40 +39,30 @@ def build_point_stream(
 def start_reference_pipeline(
     spark: SparkSession,
     *,
+    sink: Callable[[DataFrame, int], None],
     source_kind: str = "rate",
     decode: str = "none",
-    sink_dir: str | None = None,
-    jdbc_url: str | None = None,
-    jdbc_table: str = "points",
     late_sink: Callable[[DataFrame, int], None] | None = None,
     checkpoint_dir: str,
-    batch_size: int = DEFAULT_BATCH_SIZE,  # StreamingJob.java:174
     allowed_lateness: str = "5 seconds",
     available_now: bool = False,
     **source_options,
 ):
     """Wire and start the full job. Returns the StreamingQuery.
 
-    - on-time slice → BatchingForeachWriter (TimestreamSink analog,
-      ``sink_dir``) or the JDBC time-series sink (``jdbc_url`` —
-      the BASELINE.json production target)
+    - on-time slice → ``sink``, a ``foreachBatch`` callable:
+      ``BatchingForeachWriter(timestream_backend_factory(...))`` (the
+      TimestreamSink analog), ``BatchingForeachWriter(jsonl_dir=...)``
+      or ``jdbc.jdbc_point_sink(url, table)``
     - late slice → ``late_sink`` (console-print analog of
       StreamingJob.java:168 if None)
-    - exactly-once-ish via checkpointLocation + per-epoch idempotent
-      writes on either backend.
+    - exactly-once-ish via checkpointLocation + a sink whose replayed
+      epoch lands idempotently.
     """
-    if (sink_dir is None) == (jdbc_url is None):
-        raise ValueError("exactly one of sink_dir / jdbc_url required")
     points = build_point_stream(
         spark, source_kind=source_kind, decode=decode,
         watermark=allowed_lateness, **source_options,
     )
-    if jdbc_url is not None:
-        from .jdbc import jdbc_point_sink
-
-        writer = jdbc_point_sink(jdbc_url, jdbc_table)
-    else:
-        writer = BatchingForeachWriter(jsonl_dir=sink_dir, batch_size=batch_size)
 
     def default_late_sink(late_df: DataFrame, epoch_id: int) -> None:
         n = late_df.count()
@@ -80,7 +70,7 @@ def start_reference_pipeline(
             print(f"[late-data epoch={epoch_id}] {n} records")  # print() analog
 
     splitter = LateDataSplitter(
-        on_time=writer,
+        on_time=sink,
         late=late_sink or default_late_sink,
         ts_col="time",
         allowed_lateness=allowed_lateness,

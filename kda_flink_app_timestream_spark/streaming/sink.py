@@ -11,9 +11,13 @@ The reference hand-rolls everything Spark gives structurally:
 | per-record rejection repair (RejectedRecordsException → drop by index, reverse iteration, :103-120) | ``RejectedRecords`` protocol on the writer backend, same drop-and-continue contract |
 | AWS client tuning maxConnections=5000 / timeout 20 s / retries 10 (:59-62) | backend-config dict passed to the writer factory |
 
-Exactly-once-ish: writes are idempotent on ``(epoch_id, partition_id)``
-— replays of a failed micro-batch overwrite rather than duplicate
-(SURVEY §7 "what's hard" #2).
+Exactly-once-ish: a replayed micro-batch lands idempotently, by a
+different mechanism per backend (SURVEY §7 "what's hard" #2). The JSONL
+backend names files by ``(epoch_id, partition_id)``, so a replay
+overwrites rather than duplicates. The Timestream backend writes each
+partition at least once per attempt; Timestream upserts on
+(dimensions, measure name, time), which makes the replay idempotent at
+the store — the reference relies on the same.
 """
 
 from __future__ import annotations

@@ -76,3 +76,24 @@ def test_readme_and_coverage_counts_match_registry():
     assert int(m.group(1)) == len(bench.BENCH_QUERIES), (
         f"README claims {m.group(1)} bench queries, list has {len(bench.BENCH_QUERIES)}"
     )
+
+
+def test_docs_cite_only_existing_tests():
+    """Every backticked ``test_…`` token (optionally ``path::test_…``)
+    in COVERAGE.md and the verify skill must name a ``def test_…`` under
+    tests/ — a doc citing a deleted or renamed test is stale evidence."""
+    root = COVERAGE.parent
+    defined = {
+        name
+        for f in (root / "tests").rglob("*.py")
+        for name in re.findall(r"^\s*def (test_\w+)", f.read_text(), re.M)
+    }
+    cited = set()
+    for doc in (COVERAGE, root / ".claude" / "skills" / "verify" / "SKILL.md"):
+        text = re.sub(r"```.*?```", "", doc.read_text(), flags=re.S)
+        for span in re.findall(r"`([^`]+)`", text):
+            m = re.fullmatch(r"(?:\S+::)?(test_\w+)(?:\[.*\])?", "".join(span.split()))
+            if m:
+                cited.add(m.group(1))
+    missing = cited - defined
+    assert not missing, f"docs cite tests that do not exist: {sorted(missing)}"

@@ -1,14 +1,14 @@
 """Kinesis source path (SURVEY §2 #1 — StreamingJob.java:74-110).
 
 Every layer runs against the in-process fake of the public Kinesis
-HTTP API (``tests/fake_kinesis.py``); none needs a connector jar or an
+HTTP API (``streaming/kinesis_fake.py``); none needs a connector jar or an
 external endpoint:
 
 1. **The reference pipeline** — ``start_reference_pipeline(
    source_kind="kinesis")`` reads gzip'd reference-format records
    through ``streaming_source(kind="kinesis")`` → ``format("kinesis_py")``,
-   gunzips, parses and lands every record exactly once in the sink or
-   the late slice; the poll cap mirrors the reference's consumer config.
+   gunzips, parses and lands every record exactly once in the sink (JSONL
+   or the fake Timestream) or the late slice; the poll cap mirrors the reference's consumer config.
 2. **The batch snapshot** — a produce→consume round-trip through
    ``spark.read.format("kinesis_py")``: records go in via
    ``PutRecords``, come back out via shard iterators, gunzip, and
@@ -32,6 +32,8 @@ import json
 
 import pytest
 
+from kda_flink_app_timestream_spark.streaming.kinesis_fake import FakeKinesis
+
 
 def test_kinesis_default_options_mirror_reference_tuning():
     """The per-shard poll cap must match the reference's
@@ -41,18 +43,30 @@ def test_kinesis_default_options_mirror_reference_tuning():
     assert kinesis_pysource.DEFAULT_MAX_RECORDS == 10_000
 
 
-def test_kinesis_roundtrip_against_local_endpoint(spark, tmp_path):
+@pytest.mark.parametrize("sink_kind", ["jsonl", "timestream"])
+def test_kinesis_roundtrip_against_local_endpoint(spark, tmp_path, sink_kind):
     """The reference job end to end on its Kinesis path: gzip'd
     service-log records produced to a 2-shard stream are consumed by
     ``start_reference_pipeline(source_kind="kinesis")``, gunzipped,
-    parsed and routed; each produced record lands in the JSONL sink or
-    the late slice exactly once."""
+    parsed and routed; each produced record lands exactly once in the
+    store or the late slice. The store is the JSONL writer's directory,
+    or the in-process fake Timestream behind the boto3 backend (the
+    reference's Kinesis → Timestream job). The writer's engine-side
+    counts equal what was stored."""
     from kda_flink_app_timestream_spark.sources.generator import service_log_batch
+    from kda_flink_app_timestream_spark.streaming.bootstrap import (
+        initialize_timestream_boto3,
+    )
     from kda_flink_app_timestream_spark.streaming.pipeline import (
         start_reference_pipeline,
     )
-
-    from .fake_kinesis import FakeKinesis
+    from kda_flink_app_timestream_spark.streaming.sink import (
+        BatchingForeachWriter,
+        timestream_backend_factory,
+    )
+    from kda_flink_app_timestream_spark.streaming.timestream_fake import (
+        FakeTimestream,
+    )
 
     produced = [
         (r["value"], r["partition_key"])
@@ -63,8 +77,22 @@ def test_kinesis_roundtrip_against_local_endpoint(spark, tmp_path):
     def late_sink(df, epoch_id):
         late_ids.extend(r["aws_account_id"] for r in df.collect())
 
-    sink_dir = str(tmp_path / "sink")
-    with FakeKinesis() as fk:
+    creds = {"aws_access_key_id": "test", "aws_secret_access_key": "test"}
+    jsonl_dir = str(tmp_path / "sink")
+    with FakeKinesis() as fk, FakeTimestream() as ft:
+        if sink_kind == "jsonl":
+            writer = BatchingForeachWriter(jsonl_dir=jsonl_dir)
+        else:
+            initialize_timestream_boto3(
+                "svcdb", "svcpoints", endpoint_url=ft.endpoint_url,
+                client_kwargs=creds,
+            )
+            writer = BatchingForeachWriter(
+                timestream_backend_factory(
+                    "us-east-1", "svcdb", "svcpoints",
+                    endpoint_url=ft.endpoint_url, client_kwargs=creds,
+                )
+            )
         client = _fake_client(fk)
         client.create_stream(StreamName="svc-logs", ShardCount=2)
         client.put_records(
@@ -79,23 +107,32 @@ def test_kinesis_roundtrip_against_local_endpoint(spark, tmp_path):
             source_kind="kinesis",
             decode="gzip",
             available_now=True,
-            sink_dir=sink_dir,
+            sink=writer,
             checkpoint_dir=str(tmp_path / "ckpt"),
             late_sink=late_sink,
             stream_name="svc-logs",
             options={
                 "endpointUrl": fk.endpoint_url,
-                "accessKeyId": "test",
-                "secretAccessKey": "test",
+                "accessKeyId": creds["aws_access_key_id"],
+                "secretAccessKey": creds["aws_secret_access_key"],
             },
         )
         assert q.awaitTermination(120), "query did not terminate in 120s"
-    written = [
-        json.loads(line)["dimensions"]["awsaccountid"]
-        for f in glob.glob(f"{sink_dir}/epoch=*/part=*.jsonl")
-        for line in open(f)
-    ]
-    assert sorted(written + late_ids) == sorted(pk for _, pk in produced)
+        if sink_kind == "jsonl":
+            stored = [
+                json.loads(line)["dimensions"]["awsaccountid"]
+                for f in glob.glob(f"{jsonl_dir}/epoch=*/part=*.jsonl")
+                for line in open(f)
+            ]
+        else:
+            stored = [
+                d["Value"]
+                for rec in ft.store[("svcdb", "svcpoints")]
+                for d in rec["Dimensions"]
+                if d["Name"] == "awsaccountid"
+            ]
+    assert sorted(stored + late_ids) == sorted(pk for _, pk in produced)
+    assert (writer.written.value, writer.rejected.value) == (len(stored), 0)
 
 
 class _VClock:
@@ -224,8 +261,6 @@ def test_kinesis_roundtrip_against_in_process_fake_endpoint(spark):
     from kda_flink_app_timestream_spark.sources.generator import service_log_batch
     from kda_flink_app_timestream_spark.streaming.source import decode_payload
 
-    from .fake_kinesis import FakeKinesis
-
     produced = [
         (r["value"], r["partition_key"])
         for r in service_log_batch(spark, n_rows=40).collect()
@@ -275,7 +310,6 @@ def test_kinesis_snapshot_paginates_get_records(spark):
     """A shard deeper than one GetRecords page must be drained across
     multiple calls (the reference polls 10000/call; here 7/call over 25
     records forces 4+ pages)."""
-    from .fake_kinesis import FakeKinesis
 
     with FakeKinesis() as fk:
         client = _fake_client(fk)
@@ -300,8 +334,6 @@ def test_kinesis_snapshot_utf8_when_not_decoding(spark):
     from pyspark.sql import functions as SF
 
     from kda_flink_app_timestream_spark.streaming.source import decode_payload
-
-    from .fake_kinesis import FakeKinesis
 
     text = "Opération=Übersicht 測定"
     with FakeKinesis() as fk:
@@ -456,7 +488,6 @@ def test_executor_parallel_stream_matches_batch_snapshot(spark, tmp_path):
     exactly the (shard, sequence, payload) set the batch snapshot
     reads, a second run from the same checkpoint adds exactly the late
     records, and a third run with nothing new adds nothing."""
-    from .fake_kinesis import FakeKinesis
 
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
     with FakeKinesis() as fk:
@@ -497,7 +528,6 @@ def test_executor_parallel_hot_shard_skew(spark, tmp_path):
     the hot shard is a single straggler task by design — its ceiling is
     the per-shard API limit, not the consumer — and the empty shards'
     tasks drain nothing."""
-    from .fake_kinesis import FakeKinesis
 
     with FakeKinesis() as fk:
         client = _fake_client(fk)
@@ -549,8 +579,6 @@ def test_kinesis_pysource_checkpoint_resume_exactly_once(spark, tmp_path):
     from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
         KinesisPythonDataSource,
     )
-
-    from .fake_kinesis import FakeKinesis
 
     spark.dataSource.register(KinesisPythonDataSource)
     ckpt = str(tmp_path / "ckpt")
@@ -667,8 +695,6 @@ def test_kinesis_pysource_batch_plans_one_task_per_shard(spark):
     from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
         KinesisPythonDataSource,
     )
-
-    from .fake_kinesis import FakeKinesis
 
     spark.dataSource.register(KinesisPythonDataSource)
     with FakeKinesis() as fk:
@@ -963,8 +989,6 @@ def test_kinesis_pysource_partitioned_one_task_per_shard(spark, tmp_path):
         KinesisPythonDataSource,
     )
 
-    from .fake_kinesis import FakeKinesis
-
     spark.dataSource.register(KinesisPythonDataSource)
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
@@ -1037,8 +1061,6 @@ def test_kinesis_pysource_partitioned_plans_exact_ranges():
         TRIM,
         KinesisPartitionedStreamReader,
     )
-
-    from .fake_kinesis import FakeKinesis
 
     with FakeKinesis() as fk:
         client = _fake_client(fk)
@@ -1378,8 +1400,6 @@ def test_kinesis_pysource_partitioned_latestoffset_is_metadata_only():
         KinesisPartitionedStreamReader,
     )
 
-    from .fake_kinesis import FakeKinesis
-
     with FakeKinesis() as fk:
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-meta", ShardCount=1)
@@ -1437,8 +1457,6 @@ def test_kinesis_pysource_partitioned_latest_restart_covers_downtime(
     from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
         KinesisPythonDataSource,
     )
-
-    from .fake_kinesis import FakeKinesis
 
     spark.dataSource.register(KinesisPythonDataSource)
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
@@ -1618,8 +1636,6 @@ def test_kinesis_pysource_partitioned_multi_trigger_advance(spark, tmp_path):
     from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
         KinesisPythonDataSource,
     )
-
-    from .fake_kinesis import FakeKinesis
 
     spark.dataSource.register(KinesisPythonDataSource)
     out = str(tmp_path / "out")

@@ -115,7 +115,8 @@ def test_audit_covers_the_catalog():
     # layout_stream_ingest_compact — tagged streaming because building
     # its stage runs a real micro-batch sink — and +1
     # kinesis_pysource_consume, a kinesis_-prefixed real streaming run,
-    # and +1 timestream_pysink_roundtrip — streaming-tagged sink run —
+    # and +1 timestream_pysink_roundtrip — a streaming foreachBatch
+    # sink run, streaming-tagged —
     # and +1 kinesis_pysource_batch_snapshot)
     # (driver-r9: +1 kinesis_pysource_latest_resume and +1
     # kinesis_pysource_partitioned_consume — both real streaming runs

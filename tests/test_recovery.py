@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from kda_flink_app_timestream_spark.functions.parse import parse_service_logs
 from kda_flink_app_timestream_spark.sources.generator import service_log_batch
 from kda_flink_app_timestream_spark.streaming.late import LateDataSplitter
+from kda_flink_app_timestream_spark.streaming.pipeline import start_reference_pipeline
 from kda_flink_app_timestream_spark.streaming.sink import BatchingForeachWriter
 
 
@@ -30,14 +31,15 @@ def _write_blob_files(spark, path: str, start: int, n: int) -> None:
 
 
 def _run_once(spark, src_dir: str, sink_dir: str, ckpt: str) -> None:
-    stream = spark.readStream.schema("value string").json(src_dir)
-    points = parse_service_logs(stream)
-    writer = BatchingForeachWriter(jsonl_dir=sink_dir, batch_size=50)
-    q = (
-        points.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    q = start_reference_pipeline(
+        spark,
+        source_kind="file",
+        path=src_dir,
+        fmt="json",
+        schema="value string",
+        sink=BatchingForeachWriter(jsonl_dir=sink_dir, batch_size=50),
+        checkpoint_dir=ckpt,
+        available_now=True,
     )
     assert q.awaitTermination(120), 'query did not terminate in 120s'
 
@@ -205,16 +207,16 @@ def test_throttled_source_yields_multiple_epochs(spark, tmp_path):
     for start in (0, 10, 20):
         _write_blob_files(spark, src, start, 10)
     sink_dir = str(tmp_path / "sink")
-    writer = BatchingForeachWriter(jsonl_dir=sink_dir, batch_size=50)
-    stream = spark.readStream.schema("value string").option(
-        "maxFilesPerTrigger", 1
-    ).json(src)
-    q = (
-        parse_service_logs(stream)
-        .writeStream.foreachBatch(writer)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
+    q = start_reference_pipeline(
+        spark,
+        source_kind="file",
+        path=src,
+        fmt="json",
+        schema="value string",
+        options={"maxFilesPerTrigger": 1},
+        sink=BatchingForeachWriter(jsonl_dir=sink_dir, batch_size=50),
+        checkpoint_dir=str(tmp_path / "ck"),
+        available_now=True,
     )
     assert q.awaitTermination(120), 'query did not terminate in 120s'
     epochs = {f.split("epoch=")[1].split("/")[0] for f in glob.glob(f"{sink_dir}/epoch=*/part=*.jsonl")}

@@ -18,6 +18,7 @@ from kda_flink_app_timestream_spark.sources.generator import service_log_batch
 from kda_flink_app_timestream_spark.streaming.late import split_on_watermark
 from kda_flink_app_timestream_spark.streaming.pipeline import start_reference_pipeline
 from kda_flink_app_timestream_spark.streaming.sink import (
+    BatchingForeachWriter,
     RejectedRecords,
     write_chunked,
 )
@@ -174,9 +175,8 @@ def test_reference_pipeline_end_to_end(spark, tmp_path):
     q = start_reference_pipeline(
         spark,
         source_kind="rate",
-        sink_dir=sink_dir,
+        sink=BatchingForeachWriter(jsonl_dir=sink_dir, batch_size=50),
         checkpoint_dir=ckpt,
-        batch_size=50,
         options={"rows_per_second": 200},
     )
     # rate source ignores availableNow → run live, poll for output, stop

@@ -240,65 +240,3 @@ def test_write_batch_subchunks_at_api_limit():
             f"{i}.5" for i in range(n) if i not in poisoned
         }
 
-
-def test_registered_pysink_rejection_repair(spark, tmp_path):
-    """The registered ``timestream_py`` sink (Python DataSource writer
-    API) through a REAL streaming query: poisoned rows (empty measure
-    value — the fake rejects them with the service's
-    RejectedRecordsException shape) are repaired per record inside the
-    executor's write(), the batch never fails, and exactly n−k records
-    land in the store."""
-    import datetime as dt
-
-    from kda_flink_app_timestream_spark.streaming.timestream_pysink import (
-        TimestreamPythonDataSource,
-    )
-
-    spark.dataSource.register(TimestreamPythonDataSource)
-    src = str(tmp_path / "pts")
-    rows = [
-        (
-            dt.datetime(2024, 1, 1, 0, 0, i),
-            "latency",
-            "not-a-number" if i % 5 == 0 else str(float(i)),  # every 5th poisoned
-            "DOUBLE",
-            {"operation": f"op{i}"},
-        )
-        for i in range(20)
-    ]
-    spark.createDataFrame(
-        rows,
-        "time timestamp, measure_name string, measure_value string, "
-        "measure_value_type string, dimensions map<string,string>",
-    ).write.parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .parquet(src)
-    )
-    with FakeTimestream() as ft:
-        initialize_timestream_boto3(
-            "db",
-            "t",
-            endpoint_url=ft.endpoint_url,
-            client_kwargs={
-                "aws_access_key_id": "test",
-                "aws_secret_access_key": "test",
-            },
-        )
-        q = (
-            stream.writeStream.format("timestream_py")
-            .option("database", "db")
-            .option("table", "t")
-            .option("endpointUrl", ft.endpoint_url)
-            .option("accessKeyId", "test")
-            .option("secretAccessKey", "test")
-            .option("batchSize", "7")  # force multiple chunks + repair
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), 'query did not terminate in 120s'
-        stored = ft.store[("db", "t")]
-        assert len(stored) == 16  # 20 − 4 poisoned (i = 0,5,10,15)
-        got_ops = {d["Value"] for r in stored for d in r["Dimensions"]}
-        assert got_ops == {f"op{i}" for i in range(20) if i % 5 != 0}
