@@ -30,8 +30,14 @@ TABLE_NAMES = (
 )
 
 
+# An oracle that cannot finish in memory spills under the cwd's .tmp/;
+# past this cap its one query fails instead of filling the disk.
+MAX_SPILL = "4GB"
+
+
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
+    con.execute(f"SET max_temp_directory_size = '{MAX_SPILL}'")
     for t in TABLE_NAMES:
         path = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(path):  # Spark-written table = directory of parts
@@ -53,11 +59,21 @@ def _canon_rows(rows: list[tuple]) -> list[tuple]:
     return sorted(tuple(_canon_val(v) for v in r) for r in rows)
 
 
+def collect_sorted(spark_df) -> tuple[list[str], list[tuple]]:
+    """The Spark side of a compare: column names sorted, rows collected."""
+    cols = sorted(spark_df.columns)
+    return cols, [tuple(row[c] for c in cols) for row in spark_df.collect()]
+
+
 def compare_query(spark_df, oracle_con, oracle_sql: str, name: str) -> list[str]:
     """Run both sides, return mismatch descriptions (empty == pass)."""
-    spark_cols = sorted(spark_df.columns)
-    spark_rows = [tuple(row[c] for c in spark_cols) for row in spark_df.collect()]
+    return compare_rows(*collect_sorted(spark_df), oracle_con, oracle_sql, name)
 
+
+def compare_rows(
+    spark_cols: list[str], spark_rows: list[tuple], oracle_con, oracle_sql: str, name: str
+) -> list[str]:
+    """Run the oracle and compare it with ``collect_sorted``'s output."""
     cur = oracle_con.execute(oracle_sql)
     o_cols = [d[0] for d in cur.description]
     if sorted(o_cols) != spark_cols:

@@ -81,15 +81,18 @@ def test_readme_and_coverage_counts_match_registry():
 def test_docs_cite_only_existing_tests():
     """Every backticked ``test_…`` token (optionally ``path::test_…``)
     in COVERAGE.md and the verify skill must name a ``def test_…`` under
-    tests/ — a doc citing a deleted or renamed test is stale evidence."""
+    tests/, and every ``scripts/<name>.py`` in README.md, COVERAGE.md,
+    SCALE.md and the verify skill must exist — a doc citing a deleted or
+    renamed test or script is stale evidence."""
     root = COVERAGE.parent
+    skill = root / ".claude" / "skills" / "verify" / "SKILL.md"
     defined = {
         name
         for f in (root / "tests").rglob("*.py")
         for name in re.findall(r"^\s*def (test_\w+)", f.read_text(), re.M)
     }
     cited = set()
-    for doc in (COVERAGE, root / ".claude" / "skills" / "verify" / "SKILL.md"):
+    for doc in (COVERAGE, skill):
         text = re.sub(r"```.*?```", "", doc.read_text(), flags=re.S)
         for span in re.findall(r"`([^`]+)`", text):
             m = re.fullmatch(r"(?:\S+::)?(test_\w+)(?:\[.*\])?", "".join(span.split()))
@@ -97,3 +100,12 @@ def test_docs_cite_only_existing_tests():
                 cited.add(m.group(1))
     missing = cited - defined
     assert not missing, f"docs cite tests that do not exist: {sorted(missing)}"
+    missing_scripts = {
+        f"{doc.name}: {script}"
+        for doc in (root / "README.md", COVERAGE, root / "SCALE.md", skill)
+        for script in re.findall(r"scripts/\w+\.py", doc.read_text())
+        if not (root / script).is_file()
+    }
+    assert not missing_scripts, (
+        f"docs cite scripts that do not exist: {sorted(missing_scripts)}"
+    )

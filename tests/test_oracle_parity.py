@@ -54,3 +54,29 @@ def test_driver_contract_shapes(spark):
     assert list(sqls) == [n for n, q in REGISTRY.items() if q.oracle is not None]
     assert all(callable(fn) for fn in qs.values())
     assert all(isinstance(sql, str) and sql for sql in sqls.values())
+
+
+def test_catalog_gate_contract(sf_dir):
+    """``scripts/rehearse_window.py`` is the catalog gate and the scale
+    rehearsal: a failing query fails the run, and each green query's
+    line reports Spark seconds, DuckDB seconds and the heaviest stage's
+    max-task share (or the REST error that hid it)."""
+    import re
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    run = subprocess.run(
+        [sys.executable, "scripts/rehearse_window.py",
+         "q1_pricing_summary,no_such_query", sf_dir],
+        cwd=root, capture_output=True, text=True, timeout=600,
+    )
+    out = run.stdout
+    assert run.returncode == 1, out + run.stderr[-2000:]
+    assert "1/2 green" in out and "FAILURES: ['no_such_query']" in out, out
+    assert re.search(
+        r"^q1_pricing_summary: OK \(spark \d+\.\ds, duckdb \d+\.\ds, "
+        r"max-task share (\d\.\d\d of \d+ tasks|n/a \(REST error .*)\)$",
+        out, re.M,
+    ), out
