@@ -6,7 +6,10 @@ Layout
 ------
 - ``session``    : SparkSession factory + config resolution
                    (ParameterToolUtils.java analog).
-- ``schemas``    : TimestreamPoint StructType + testdata table schemas.
+- ``zipcache``   : per-task zip re-parse fix, installed on import here,
+                   so every Python worker that runs an engine function
+                   has it whoever built the session.
+- ``schemas``    : TimestreamPoint StructType + testdata table names.
 - ``sources``    : batch table loaders + pluggable streaming sources
                    (file / rate / kinesis) with gzip decode.
 - ``functions``  : scalar-expression libraries — service-log parsing,
@@ -18,5 +21,9 @@ Layout
 - ``plans``      : the named query catalog the driver scores — each query
                    is a (PySpark callable, DuckDB oracle SQL) pair.
 """
+
+from . import zipcache
+
+zipcache.install()
 
 __version__ = "0.1.0"

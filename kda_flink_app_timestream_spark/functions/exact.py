@@ -33,10 +33,6 @@ def cents(col: Column) -> Column:
     return F.round(col * 100).cast("long")
 
 
-def sql_cents(expr: str) -> str:
-    return f"CAST(round(({expr}) * 100) AS BIGINT)"
-
-
 def spark_div_round(num_col: str, den_col: str, out_pow: int = 0) -> str:
     """selectExpr fragment: half-up round of num/den × 10^out_pow —
     BIGINT path (positive numerators)."""

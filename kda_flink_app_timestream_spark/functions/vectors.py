@@ -56,8 +56,3 @@ def dot_unrolled(a: str, b: str, dim: int) -> Column:
 
 def norm_unrolled(a: str, dim: int) -> Column:
     return F.sqrt(dot_unrolled(a, a, dim))
-
-
-def sql_cosine(a: str, b: str) -> str:
-    """DuckDB twin (cast to DOUBLE[] first for identical arithmetic)."""
-    return f"list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[])"

@@ -1,4 +1,4 @@
-"""Schemas: the TimestreamPoint record model and the driver testdata tables.
+"""Schemas: the TimestreamPoint record model and the driver testdata table names.
 
 ``TIMESTREAM_POINT_SCHEMA`` is the Spark rendering of the reference's one
 data abstraction, the mutable POJO ``TimestreamPoint``
@@ -34,10 +34,6 @@ TIMESTREAM_POINT_SCHEMA = T.StructType(
     ]
 )
 
-# Timestream's MeasureValueType enum values (TimestreamPoint.java:27 uses the
-# AWS SDK enum; only DOUBLE is produced by the reference parser).
-MEASURE_VALUE_TYPES = ("DOUBLE", "BIGINT", "VARCHAR", "BOOLEAN", "TIMESTAMP", "MULTI")
-
 # --- driver testdata tables (TESTDATA.md / FIXTURES.md §B) ------------------
 
 TABLE_NAMES = (
@@ -52,101 +48,3 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
-
-TESTDATA_SCHEMAS: dict[str, T.StructType] = {
-    "region": T.StructType(
-        [
-            T.StructField("r_regionkey", T.IntegerType()),
-            T.StructField("r_name", T.StringType()),
-        ]
-    ),
-    "nation": T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("n_name", T.StringType()),
-            T.StructField("n_regionkey", T.IntegerType()),
-        ]
-    ),
-    "customer": T.StructType(
-        [
-            T.StructField("c_custkey", T.LongType()),
-            T.StructField("c_name", T.StringType()),
-            T.StructField("c_nationkey", T.IntegerType()),
-            T.StructField("c_acctbal", T.DoubleType()),
-            T.StructField("c_mktsegment", T.StringType()),
-        ]
-    ),
-    "supplier": T.StructType(
-        [
-            T.StructField("s_suppkey", T.LongType()),
-            T.StructField("s_name", T.StringType()),
-            T.StructField("s_nationkey", T.IntegerType()),
-            T.StructField("s_acctbal", T.DoubleType()),
-        ]
-    ),
-    "part": T.StructType(
-        [
-            T.StructField("p_partkey", T.LongType()),
-            T.StructField("p_name", T.StringType()),
-            T.StructField("p_brand", T.StringType()),
-            T.StructField("p_type", T.StringType()),
-            T.StructField("p_size", T.IntegerType()),
-            T.StructField("p_retailprice", T.DoubleType()),
-        ]
-    ),
-    "orders": T.StructType(
-        [
-            T.StructField("o_orderkey", T.LongType()),
-            T.StructField("o_custkey", T.LongType()),
-            T.StructField("o_orderstatus", T.StringType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
-            T.StructField("o_orderpriority", T.StringType()),
-        ]
-    ),
-    "lineitem": T.StructType(
-        [
-            T.StructField("l_orderkey", T.LongType()),
-            T.StructField("l_partkey", T.LongType()),
-            T.StructField("l_suppkey", T.LongType()),
-            T.StructField("l_linenumber", T.IntegerType()),
-            T.StructField("l_quantity", T.DoubleType()),
-            T.StructField("l_extendedprice", T.DoubleType()),
-            T.StructField("l_discount", T.DoubleType()),
-            T.StructField("l_tax", T.DoubleType()),
-            T.StructField("l_returnflag", T.StringType()),
-            T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
-        ]
-    ),
-    "events": T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    ),
-    "documents": T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    ),
-    "embeddings": T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    ),
-}
-
-# Raw service-log input record (FIXTURES.md §A1): one multi-line Key=Value
-# blob per record, as emitted by timestream_kinesis_data_gen.py:25-36.
-SERVICE_LOG_RAW_SCHEMA = T.StructType([T.StructField("value", T.StringType())])

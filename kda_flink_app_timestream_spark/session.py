@@ -25,15 +25,14 @@ but every knob matters equally on a real cluster:
   when the code generator first loads, so only ``build_spark`` can set
   it; ``configure_runtime`` cannot apply it to a session the driver
   owns, which keeps whatever cache size its builder chose.
-- Python workers forked from the engine's daemon
-  (``spark.python.daemon.module`` = ``PYTHON_DAEMON_MODULE``, see
-  ``pydaemon.py``). pyspark's worker calls ``importlib.invalidate_caches()``
-  at the start of every task, which on CPython < 3.12 re-parses
-  ``pyspark.zip``'s directory once per package importer: 0.15-0.26 s
-  of CPU per task, and an ``ingest`` trigger runs 12 Python tasks. The
-  daemon re-reads an archive only when it changed. Also a static conf,
-  read when the worker factory starts, so only ``build_spark`` sets it;
-  the package must be importable where workers start.
+- The per-task ``pyspark.zip`` re-parse fix, installed on package
+  import (``zipcache.py``). pyspark's worker calls
+  ``importlib.invalidate_caches()`` at the start of every task, which on
+  CPython < 3.12 re-parses ``pyspark.zip``'s directory once per package
+  importer: 0.1-0.26 s of CPU per task, and an ``ingest`` trigger runs
+  12 Python tasks. A worker that unpickles an engine function imports
+  the package and from then on re-reads an archive only when it
+  changed, so this needs no conf and holds in any session.
 """
 
 from __future__ import annotations
@@ -46,8 +45,20 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # Generated classes the codegen cache keeps: a wide margin over the
 # benchmark mix's 123, so a larger catalog mix still fits.
 CODEGEN_CACHE_ENTRIES = 2000
-# The Python worker daemon: pyspark's, minus the per-task zip re-parse.
-PYTHON_DAEMON_MODULE = "kda_flink_app_timestream_spark.pydaemon"
+# Runtime-settable defaults: ``build_spark`` passes them to its builder
+# and ``configure_runtime`` sets them on a session the driver built.
+RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    # round-1 testdata stored events.ts as TIMESTAMP(NANOS), which
+    # Spark's parquet reader rejects without this flag (read as long,
+    # normalized in functions/time.py). Harmless for the current
+    # timestamp[us] layout; kept so either layout loads.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
 
 
 def build_spark(
@@ -71,23 +82,11 @@ def build_spark(
         .master(master or f"local[{cpus}]")
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
-        # round-1 testdata stored events.ts as TIMESTAMP(NANOS), which
-        # Spark's parquet reader rejects without this flag (read as long,
-        # normalized in functions/time.py). Harmless for the current
-        # timestamp[us] layout; kept so either layout loads.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(map={**RUNTIME_CONF, **extra_conf})
     )
-    for k, v in extra_conf.items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
@@ -192,19 +191,11 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine conf to an externally-built session.
 
     The driver harness owns the SparkSession it passes into
-    ``__spark_entry__.entry/queries``; this applies the subset of our
+    ``__spark_entry__.entry/queries``; this applies ``RUNTIME_CONF``, the
     defaults that can be set post-startup (timezone is the critical one
     for oracle-identical timestamp collection).
     """
-    runtime_conf = {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-    }
-    for k, v in runtime_conf.items():
+    for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:

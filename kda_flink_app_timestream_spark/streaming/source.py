@@ -22,6 +22,7 @@ inheriting the bug.
 
 from __future__ import annotations
 
+import functools
 import gzip
 from typing import Any
 
@@ -77,30 +78,27 @@ def streaming_source(
     return df
 
 
-_GUNZIP_UDF = None
+def _gunzip(s: pd.Series) -> pd.Series:
+    """gzip→UTF-8 decode of one Arrow batch. Module level, so workers
+    unpickle it by reference and import the package (``zipcache.py``)."""
+
+    def one(v):
+        if v is None:
+            return None
+        b = v if isinstance(v, (bytes, bytearray)) else str(v).encode("latin-1")
+        if len(b) >= 2 and b[0] == 0x1F and b[1] == 0x8B:  # gzip magic
+            return gzip.decompress(b).decode("utf-8")
+        return b.decode("utf-8", errors="replace")
+
+    return s.map(one)
 
 
+@functools.cache
 def _gunzip_udf():
     """Arrow-batched gzip→UTF-8 decode. A Python step is unavoidable here
     (no built-in gunzip expression); pandas_udf keeps it vectorized per
-    Arrow batch rather than per row. Built lazily — the pandas_udf
-    decorator needs an active SparkSession."""
-    global _GUNZIP_UDF
-    if _GUNZIP_UDF is None:
-
-        def gunzip(s: pd.Series) -> pd.Series:
-            def one(v):
-                if v is None:
-                    return None
-                b = v if isinstance(v, (bytes, bytearray)) else str(v).encode("latin-1")
-                if len(b) >= 2 and b[0] == 0x1F and b[1] == 0x8B:  # gzip magic
-                    return gzip.decompress(b).decode("utf-8")
-                return b.decode("utf-8", errors="replace")
-
-            return s.map(one)
-
-        _GUNZIP_UDF = F.pandas_udf(gunzip, T.StringType())
-    return _GUNZIP_UDF
+    Arrow batch rather than per row. Built once, on first use."""
+    return F.pandas_udf(_gunzip, T.StringType())
 
 
 def decode_payload(col: F.Column, codec: str = "gzip") -> F.Column:

@@ -1,6 +1,5 @@
-"""Python worker daemon for engine sessions: pyspark's own daemon, with
-zip-archive cache invalidation paid once per archive change instead of
-once per task.
+"""Zip-archive cache invalidation paid once per archive change instead
+of once per task, installed in every process that imports the package.
 
 pyspark's worker calls ``importlib.invalidate_caches()`` at the start
 of every task (``pyspark/worker_util.py``, after it puts the task's
@@ -8,8 +7,8 @@ of every task (``pyspark/worker_util.py``, after it puts the task's
 ``zipimporter.invalidate_caches`` re-parses the archive's whole central
 directory, eagerly, once per importer — and every package imported
 from ``pyspark.zip`` has its own importer on that archive. The 1,328
-entry ``pyspark.zip`` is thus parsed about 16 times per task, about
-0.26 s of CPU, which is more than a streaming trigger's own Python work.
+entry ``pyspark.zip`` is thus parsed about 16 times per task, 0.1-0.26 s
+of CPU, which is more than a streaming trigger's own Python work.
 CPython 3.12 made the invalidation lazy (gh-103200), so the patch below
 is gated to older interpreters.
 
@@ -21,13 +20,12 @@ call stays: pyspark still invalidates on every task, directory
 (``FileFinder``) caches are still dropped, a rewritten zip is re-read,
 and new ``addPyFile`` archives get importers as before.
 
-``session.build_spark`` names this module in ``spark.python.daemon.module``.
-Spark starts it as ``python -m kda_flink_app_timestream_spark.pydaemon``
-and forks every worker from it, so each worker inherits the patch. The
-package must be importable where workers start (the working directory
-or ``PYTHONPATH``), as every Python operator the engine ships already
-requires. ``spark.python.worker.module`` cannot carry the patch: pyspark's
-daemon imports only worker modules named ``pyspark*``.
+The package's ``__init__`` calls ``install``, so it holds in any
+session, however it was built. A Python worker imports the package
+when it unpickles an engine function, which pickles by reference as
+long as it is defined at module level; every later task of that reused
+worker skips the re-parse. Each new worker's first task still pays
+one, since pyspark invalidates before it reads the task's function.
 """
 
 from __future__ import annotations
@@ -81,9 +79,3 @@ def install() -> None:
         zipimport._read_directory = _read_directory
         zipimport.zipimporter.invalidate_caches = _invalidate_caches
 
-
-if __name__ == "__main__":
-    install()
-    from pyspark.daemon import manager
-
-    manager()

@@ -81,9 +81,10 @@ def test_readme_and_coverage_counts_match_registry():
 def test_docs_cite_only_existing_tests():
     """Every backticked ``test_…`` token (optionally ``path::test_…``)
     in COVERAGE.md and the verify skill must name a ``def test_…`` under
-    tests/, and every ``scripts/<name>.py`` in README.md, COVERAGE.md,
-    SCALE.md and the verify skill must exist — a doc citing a deleted or
-    renamed test or script is stale evidence."""
+    tests/, and every backticked ``*.py`` path (repo- or package-
+    relative, inline or fenced) in README.md, COVERAGE.md, SCALE.md and
+    the verify skill must exist — a doc citing a deleted or renamed test,
+    module or script is stale evidence."""
     root = COVERAGE.parent
     skill = root / ".claude" / "skills" / "verify" / "SKILL.md"
     defined = {
@@ -100,12 +101,14 @@ def test_docs_cite_only_existing_tests():
                 cited.add(m.group(1))
     missing = cited - defined
     assert not missing, f"docs cite tests that do not exist: {sorted(missing)}"
-    missing_scripts = {
-        f"{doc.name}: {script}"
+    modules = {p.relative_to(root).as_posix() for p in root.rglob("*.py")}
+    missing_modules = {
+        f"{doc.name}: {path}"
         for doc in (root / "README.md", COVERAGE, root / "SCALE.md", skill)
-        for script in re.findall(r"scripts/\w+\.py", doc.read_text())
-        if not (root / script).is_file()
+        for span in re.findall(r"```.*?```|`[^`]+`", doc.read_text(), re.S)
+        for path in re.findall(r"[\w./-]*\w\.py\b", span)
+        if not any(m == path or m.endswith("/" + path) for m in modules)
     }
-    assert not missing_scripts, (
-        f"docs cite scripts that do not exist: {sorted(missing_scripts)}"
+    assert not missing_modules, (
+        f"docs cite modules that do not exist: {sorted(missing_modules)}"
     )
