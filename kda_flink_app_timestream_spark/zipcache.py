@@ -23,9 +23,11 @@ and new ``addPyFile`` archives get importers as before.
 The package's ``__init__`` calls ``install``, so it holds in any
 session, however it was built. A Python worker imports the package
 when it unpickles an engine function, which pickles by reference as
-long as it is defined at module level; every later task of that reused
-worker skips the re-parse. Each new worker's first task still pays
-one, since pyspark invalidates before it reads the task's function.
+long as it is defined at module level. Each new worker's first task
+still pays the re-parse, since pyspark invalidates before it reads the
+task's function. Its second task reads each archive once more, since
+importers made before ``install`` carry no stamp; later tasks of that
+reused worker read none.
 """
 
 from __future__ import annotations

@@ -36,8 +36,10 @@ def test_zip_directory_reread_only_when_archive_changes(tmp_path):
     archive = str(tmp_path / "mods.zip")
     _write_zip(archive, {"zipcache_probe_a.py": "VALUE = 'a'\n"})
     with contextlib.ExitStack() as stack:
+        # importing the package already installed the patch, and install()
+        # below re-applies it so the test does not lean on that import;
         # patching each attribute with its own value restores it on exit,
-        # so install() does not outlive the test
+        # which undoes the wraps= spy set further down
         stack.enter_context(
             mock.patch.object(zipimport, "_read_directory", zipimport._read_directory)
         )
